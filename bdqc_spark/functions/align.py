@@ -43,12 +43,11 @@ amplitude-modulated.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 
+from bdqc_spark.functions.audio import signal_pass
 from bdqc_spark.functions.audio_features import HOP_MS, WIN_MS, _hann, mel_filterbank
 from bdqc_spark.functions.audio_fingerprint import VERIFY_FLOOR, fp_from_spec_mean
 
@@ -61,8 +60,11 @@ ACT_L2_DEFAULT = 3.0        # active-profile L2 acceptance bound
 ENV_EPS = 1e-12
 
 ALIGN_FIELDS = (
-    "env_ok boolean, audio_fp bigint, env array<float>, env_hop_ms float, "
-    "act_profile array<float>"
+    ("env_ok", pa.bool_(), False),
+    ("audio_fp", pa.int64(), 0),
+    ("env", pa.list_(pa.float32()), None),
+    ("env_hop_ms", pa.float32(), 0.0),
+    ("act_profile", pa.list_(pa.float32()), None),
 )
 
 
@@ -194,53 +196,11 @@ def xcorr_align(env_a: np.ndarray, env_b: np.ndarray,
     return int(lags[best]), float(min(max(ncc[best], -1.0), 1.0))
 
 
-def _envelope_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from bdqc_spark.functions.audio import CODECS, decode_arrow_slice
-    from bdqc_spark.plans.profile import _binary_buffers
-
-    for batch in batches:
-        n = batch.num_rows
-        barr = batch.column(batch.schema.get_field_index("bytes"))
-        offsets, data = _binary_buffers(barr)
-        nulls = pa.compute.is_null(barr).to_numpy(zero_copy_only=False)
-        codec = batch.column(batch.schema.get_field_index("codec")).to_pylist()
-        sr_arr = batch.column(batch.schema.get_field_index("sr_hz"))
-        sr_null = pa.compute.is_null(sr_arr).to_numpy(zero_copy_only=False)
-        sr = sr_arr.to_numpy(zero_copy_only=False)
-
-        ok = np.zeros(n, bool)
-        fp = np.zeros(n, np.int64)
-        envs: list = [None] * n
-        hops = np.zeros(n, np.float32)
-        profs: list = [None] * n
-        for i in range(n):
-            if nulls[i] or codec[i] not in CODECS or sr_null[i] or not (sr[i] > 0):
-                continue
-            try:
-                pcm = decode_arrow_slice(data, int(offsets[i]), int(offsets[i + 1]), codec[i])
-                got = clip_align_features(pcm, int(sr[i]))
-            except (ValueError, TypeError):
-                continue
-            if got is None:
-                continue
-            ok[i] = True
-            fp[i], envs[i], hops[i], profs[i] = got
-
-        passthrough = {
-            name: batch.column(batch.schema.get_field_index(name))
-            for name in batch.schema.names
-            if name != "bytes"
-        }
-        yield pa.RecordBatch.from_pydict(
-            {
-                **passthrough,
-                "env_ok": pa.array(ok),
-                "audio_fp": pa.array(fp, pa.int64()),
-                "env": pa.array(envs, pa.list_(pa.float32())),
-                "env_hop_ms": pa.array(hops, pa.float32()),
-                "act_profile": pa.array(profs, pa.list_(pa.float32())),
-            }
-        )
+def _envelope_signal(pcm: np.ndarray, sr: int) -> dict | None:
+    got = clip_align_features(pcm, sr)
+    if got is None:
+        return None
+    return dict(zip(("audio_fp", "env", "env_hop_ms", "act_profile"), got))
 
 
 def envelope_clips(clips):
@@ -248,12 +208,7 @@ def envelope_clips(clips):
     band-support fingerprint + bounded log-energy envelope, one decode
     pass; passthrough columns preserved, `bytes` never leaves the
     stage (same contract as profile_clips / fingerprint_clips)."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in clips.schema.fields
-        if f.name != "bytes"
-    )
-    return clips.mapInArrow(_envelope_arrow, f"{schema}, {ALIGN_FIELDS}")
+    return signal_pass(clips, _envelope_signal, ALIGN_FIELDS, "env_ok")
 
 
 def audio_aligned_dup_pairs(

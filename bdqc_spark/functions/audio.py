@@ -15,8 +15,11 @@ per-batch Python dispatch, per-row work stays in C (input_hint:
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 CODECS = ("pcm_s16le", "pcm_f32le", "ulaw", "alaw", "wav", "flac")
 
@@ -678,6 +681,137 @@ def decode_arrow_slice(data: np.ndarray, start: int, end: int, codec: str) -> np
 
         return flac_decode(data[start:end])
     raise ValueError(f"unknown codec {codec!r}")
+
+
+# --------------------------------------------------------------------------
+# The audio kernel: the one place a clip is decoded
+# --------------------------------------------------------------------------
+def _binary_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(offsets, data) numpy views of an Arrow (large_)binary array."""
+    off_dtype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offsets = np.frombuffer(arr.buffers()[1], dtype=off_dtype)[arr.offset : arr.offset + len(arr) + 1]
+    data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
+    return offsets, data
+
+
+def _signal_ddl(schema, fields, drop=()) -> str:
+    """Output DDL of `_signal_batches` over an input of Spark `schema`:
+    the pass-through columns in input order, then `fields`."""
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    out = {name for name, _, _ in fields}
+    keep = [
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in schema.fields
+        if f.name != "bytes" and f.name not in drop and f.name not in out
+    ]
+    made = [f"{name} {from_arrow_type(t).simpleString()}" for name, t, _ in fields]
+    return ", ".join(keep + made)
+
+
+def _signal_batches(
+    batches, fn, fields, ok, extra=(), drop=(), need_sr=True, decode=decode_arrow_slice
+):
+    """Decode every clip once and hand its PCM to `fn`.
+
+    Batches carry (bytes, codec, sr_hz, ...); sr_hz may be absent when
+    not `need_sr`. A row is decoded only if
+    its payload and codec are valid and, when `need_sr`, its sr_hz is
+    a positive non-null int; the masks come from the Arrow validity
+    bitmap (a null int surfaces as NaN through to_numpy, which passes
+    neither `is None` nor `<= 0`). The payload is a zero-copy numpy
+    view of the Arrow value buffer, and `decode(data, start, end,
+    codec)` turns it into the samples (mono float32 PCM by default).
+    Then
+
+        fn(pcm, sr, *extra values) -> dict | None
+
+    where sr is None for an invalid sr_hz (only when not `need_sr`)
+    and an `extra` name of "bytes" passes the raw payload view. A dict
+    sets the `ok` field true and writes its non-None values; None, or
+    a ValueError/TypeError from the decode or from `fn`, leaves the
+    row not-ok. Every unwritten cell keeps its field's fill value.
+
+    `fields` is a sequence of (name, Arrow type, fill); a fill of None
+    makes the field nullable. The output
+    batch is every input column except `bytes`, `drop` and the field
+    names, in input order, followed by `fields` in declared order."""
+    names = [name for name, _, _ in fields]
+    for batch in batches:
+        n = batch.num_rows
+        col = batch.column
+        barr = col("bytes")
+        offsets, data = _binary_buffers(barr)
+        no_bytes = barr.is_null().to_numpy(zero_copy_only=False)
+        codec = col("codec").to_pylist()
+        # operators that do not need the rate also run without sr_hz
+        has_sr = need_sr or "sr_hz" in batch.schema.names
+        sr_arr = col("sr_hz") if has_sr else pa.nulls(n, pa.int32())
+        sr_null = sr_arr.is_null().to_numpy(zero_copy_only=False)
+        sr = sr_arr.to_numpy(zero_copy_only=False)
+        args = [None if x == "bytes" else col(x).to_pylist() for x in extra]
+        out = {
+            name: [fill] * n
+            if fill is None or not pa.types.is_primitive(t)
+            else np.full(n, fill, t.to_pandas_dtype())
+            for name, t, fill in fields
+        }
+        for i in range(n):
+            sr_ok = not sr_null[i] and sr[i] > 0
+            if no_bytes[i] or codec[i] not in CODECS or (need_sr and not sr_ok):
+                continue
+            s, e = int(offsets[i]), int(offsets[i + 1])
+            try:
+                pcm = decode(data, s, e, codec[i])
+                got = fn(pcm, int(sr[i]) if sr_ok else None,
+                         *(data[s:e] if a is None else a[i] for a in args))
+            except (ValueError, TypeError):
+                continue
+            if got is None:
+                continue
+            out[ok][i] = True
+            for k, v in got.items():
+                if v is not None:
+                    out[k][i] = v
+        keep = [c for c in batch.schema.names if c != "bytes" and c not in drop and c not in out]
+        yield pa.RecordBatch.from_arrays(
+            [col(c) for c in keep] + [pa.array(out[name], t) for name, t, _ in fields],
+            names=keep + names,
+        )
+
+
+# Output of the rewrite operators: the re-encoded payload replaces the
+# input's bytes/sr_hz/codec; a not-ok row gets a null payload.
+_REWRITE_FIELDS = (
+    ("bytes", pa.binary(), None),
+    ("sr_hz", pa.int32(), 0),
+    ("codec", pa.string(), None),
+)
+
+
+def _rewritten(pcm: np.ndarray, sr: int) -> dict:
+    """The `_REWRITE_FIELDS` values of a rewritten clip."""
+    return {"bytes": encode(pcm, "pcm_s16le"), "sr_hz": sr, "codec": "pcm_s16le"}
+
+
+def signal_pass(
+    clips, fn, fields, ok, extra=(), drop=(), need_sr=True, decode=decode_arrow_slice
+):
+    """clips(bytes, codec, sr_hz, ...) -> one row per clip: the
+    pass-through columns plus `fields`, computed by `fn` over each
+    decoded clip in ONE mapInArrow pass (see `_signal_batches`).
+    `bytes` is consumed map-side and never leaves the stage."""
+    gen = partial(
+        _signal_batches,
+        fn=fn,
+        fields=fields,
+        ok=ok,
+        extra=extra,
+        drop=drop,
+        need_sr=need_sr,
+        decode=decode,
+    )
+    return clips.mapInArrow(gen, _signal_ddl(clips.schema, fields, drop))
 
 
 # --------------------------------------------------------------------------

@@ -20,10 +20,11 @@ module-cached) mel filterbank; no per-sample Python.
 from __future__ import annotations
 
 from functools import lru_cache
-from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
+
+from bdqc_spark.functions.audio import signal_pass
 
 N_MELS = 24
 N_MFCC = 13
@@ -31,10 +32,16 @@ WIN_MS = 25.0
 HOP_MS = 10.0
 
 AUDIO_FEATURES_FIELDS = (
-    "feat_ok boolean, n_frames int, n_mels int, "
-    "mel_mean array<float>, mel_std array<float>, "
-    "mfcc_mean array<float>, mfcc_std array<float>, "
-    "spectral_centroid double, spectral_rolloff double, spectral_flatness double"
+    ("feat_ok", pa.bool_(), False),
+    ("n_frames", pa.int32(), 0),
+    ("n_mels", pa.int32(), 0),
+    ("mel_mean", pa.list_(pa.float32()), None),
+    ("mel_std", pa.list_(pa.float32()), None),
+    ("mfcc_mean", pa.list_(pa.float32()), None),
+    ("mfcc_std", pa.list_(pa.float32()), None),
+    ("spectral_centroid", pa.float64(), 0.0),
+    ("spectral_rolloff", pa.float64(), 0.0),
+    ("spectral_flatness", pa.float64(), 0.0),
 )
 
 
@@ -120,80 +127,13 @@ def clip_features(pcm: np.ndarray, sr: int, n_mels: int = N_MELS) -> dict | None
     }
 
 
-def _features_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from bdqc_spark.functions.audio import CODECS, decode_arrow_slice
-    from bdqc_spark.plans.profile import _binary_buffers
-
-    for batch in batches:
-        n = batch.num_rows
-        barr = batch.column(batch.schema.get_field_index("bytes"))
-        offsets, data = _binary_buffers(barr)
-        nulls = pa.compute.is_null(barr).to_numpy(zero_copy_only=False)
-        codec = batch.column(batch.schema.get_field_index("codec")).to_pylist()
-        sr_arr = batch.column(batch.schema.get_field_index("sr_hz"))
-        # null ints surface as NaN after to_numpy — consult the validity
-        # bitmap, not the values (a NaN passes neither `is None` nor `<= 0`)
-        sr_null = pa.compute.is_null(sr_arr).to_numpy(zero_copy_only=False)
-        sr = sr_arr.to_numpy(zero_copy_only=False)
-
-        ok = np.zeros(n, bool)
-        n_frames = np.zeros(n, np.int32)
-        mel_mean: list = [None] * n
-        mel_std: list = [None] * n
-        mfcc_mean: list = [None] * n
-        mfcc_std: list = [None] * n
-        cent = np.zeros(n, np.float64)
-        roll = np.zeros(n, np.float64)
-        flat = np.zeros(n, np.float64)
-        for i in range(n):
-            if nulls[i] or codec[i] not in CODECS or sr_null[i] or not (sr[i] > 0):
-                continue
-            try:
-                pcm = decode_arrow_slice(data, int(offsets[i]), int(offsets[i + 1]), codec[i])
-                feats = clip_features(pcm, int(sr[i]))
-            except (ValueError, TypeError):
-                continue
-            if feats is None:
-                continue
-            ok[i] = True
-            n_frames[i] = feats["n_frames"]
-            mel_mean[i] = feats["mel_mean"]
-            mel_std[i] = feats["mel_std"]
-            mfcc_mean[i] = feats["mfcc_mean"]
-            mfcc_std[i] = feats["mfcc_std"]
-            cent[i] = feats["spectral_centroid"]
-            roll[i] = feats["spectral_rolloff"]
-            flat[i] = feats["spectral_flatness"]
-
-        passthrough = {
-            name: batch.column(batch.schema.get_field_index(name))
-            for name in batch.schema.names
-            if name != "bytes"
-        }
-        yield pa.RecordBatch.from_pydict(
-            {
-                **passthrough,
-                "feat_ok": pa.array(ok),
-                "n_frames": pa.array(n_frames, pa.int32()),
-                "n_mels": pa.array(np.where(ok, N_MELS, 0).astype(np.int32), pa.int32()),
-                "mel_mean": pa.array(mel_mean, pa.list_(pa.float32())),
-                "mel_std": pa.array(mel_std, pa.list_(pa.float32())),
-                "mfcc_mean": pa.array(mfcc_mean, pa.list_(pa.float32())),
-                "mfcc_std": pa.array(mfcc_std, pa.list_(pa.float32())),
-                "spectral_centroid": pa.array(cent),
-                "spectral_rolloff": pa.array(roll),
-                "spectral_flatness": pa.array(flat),
-            }
-        )
+def _features_signal(pcm: np.ndarray, sr: int) -> dict | None:
+    feats = clip_features(pcm, sr)
+    return None if feats is None else {**feats, "n_mels": N_MELS}
 
 
 def extract_audio_features(clips):
     """clips(clip_id, bytes, sr_hz, codec [, ...]) → per-clip feature
     rows; passthrough columns preserved, `bytes` never leaves the
     stage (same contract as profile_clips)."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in clips.schema.fields
-        if f.name != "bytes"
-    )
-    return clips.mapInArrow(_features_arrow, f"{schema}, {AUDIO_FEATURES_FIELDS}")
+    return signal_pass(clips, _features_signal, AUDIO_FEATURES_FIELDS, "feat_ok")

@@ -50,11 +50,10 @@ floats — that is all that ever shuffles).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 
+from bdqc_spark.functions.audio import signal_pass
 from bdqc_spark.functions.audio_features import HOP_MS, WIN_MS, _hann, mel_filterbank
 
 FP_BANDS = 64          # fingerprint bands == fingerprint bits
@@ -64,7 +63,10 @@ VERIFY_FLOOR = 1e-3    # clip-relative noise floor inside the verify log
 VERIFY_L2_DEFAULT = 20.0
 
 AUDIO_FP_FIELDS = (
-    "fp_ok boolean, audio_fp bigint, fp_frames int, fp_profile array<float>"
+    ("fp_ok", pa.bool_(), False),
+    ("audio_fp", pa.int64(), 0),
+    ("fp_frames", pa.int32(), 0),
+    ("fp_profile", pa.list_(pa.float32()), None),
 )
 
 _BIT_WEIGHTS = (1 << np.arange(FP_BANDS, dtype=np.uint64)).astype(np.uint64)
@@ -110,65 +112,18 @@ def clip_fingerprint(pcm: np.ndarray, sr: int):
     return fp, n_frames, profile
 
 
-def _fingerprint_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from bdqc_spark.functions.audio import CODECS, decode_arrow_slice
-    from bdqc_spark.plans.profile import _binary_buffers
-
-    for batch in batches:
-        n = batch.num_rows
-        barr = batch.column(batch.schema.get_field_index("bytes"))
-        offsets, data = _binary_buffers(barr)
-        nulls = pa.compute.is_null(barr).to_numpy(zero_copy_only=False)
-        codec = batch.column(batch.schema.get_field_index("codec")).to_pylist()
-        sr_arr = batch.column(batch.schema.get_field_index("sr_hz"))
-        # null ints surface as NaN after to_numpy — consult the validity
-        # bitmap, not the values (same guard as audio_features)
-        sr_null = pa.compute.is_null(sr_arr).to_numpy(zero_copy_only=False)
-        sr = sr_arr.to_numpy(zero_copy_only=False)
-
-        ok = np.zeros(n, bool)
-        fp = np.zeros(n, np.int64)
-        nframes = np.zeros(n, np.int32)
-        prof: list = [None] * n
-        for i in range(n):
-            if nulls[i] or codec[i] not in CODECS or sr_null[i] or not (sr[i] > 0):
-                continue
-            try:
-                pcm = decode_arrow_slice(data, int(offsets[i]), int(offsets[i + 1]), codec[i])
-                got = clip_fingerprint(pcm, int(sr[i]))
-            except (ValueError, TypeError):
-                continue
-            if got is None:
-                continue
-            ok[i] = True
-            fp[i], nframes[i], prof[i] = got
-
-        passthrough = {
-            name: batch.column(batch.schema.get_field_index(name))
-            for name in batch.schema.names
-            if name != "bytes"
-        }
-        yield pa.RecordBatch.from_pydict(
-            {
-                **passthrough,
-                "fp_ok": pa.array(ok),
-                "audio_fp": pa.array(fp, pa.int64()),
-                "fp_frames": pa.array(nframes, pa.int32()),
-                "fp_profile": pa.array(prof, pa.list_(pa.float32())),
-            }
-        )
+def _fingerprint_signal(pcm: np.ndarray, sr: int) -> dict | None:
+    got = clip_fingerprint(pcm, sr)
+    if got is None:
+        return None
+    return dict(zip(("audio_fp", "fp_frames", "fp_profile"), got))
 
 
 def fingerprint_clips(clips):
     """clips(clip_id, bytes, sr_hz, codec [, ...]) → per-clip acoustic
     fingerprint rows; passthrough columns preserved, `bytes` never
     leaves the stage (same contract as profile_clips)."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in clips.schema.fields
-        if f.name != "bytes"
-    )
-    return clips.mapInArrow(_fingerprint_arrow, f"{schema}, {AUDIO_FP_FIELDS}")
+    return signal_pass(clips, _fingerprint_signal, AUDIO_FP_FIELDS, "fp_ok")
 
 
 def audio_dup_pairs(

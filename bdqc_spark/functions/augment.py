@@ -30,14 +30,17 @@ payload), never crash the task.
 from __future__ import annotations
 
 import zlib
-from typing import Iterator
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
 
-AUGMENT_FIELDS = (
-    "bytes binary, sr_hz int, codec string, "
-    "augment_ok boolean, n_samples int, dur_ms int"
+from bdqc_spark.functions.audio import _REWRITE_FIELDS, _rewritten, signal_pass
+
+AUGMENT_FIELDS = _REWRITE_FIELDS + (
+    ("augment_ok", pa.bool_(), False),
+    ("n_samples", pa.int32(), 0),
+    ("dur_ms", pa.int32(), 0),
 )
 
 
@@ -132,77 +135,26 @@ def mix_noise(pcm: np.ndarray, snr_db: float, rng: np.random.Generator) -> np.nd
     return np.clip(pcm + noise, -1.0, 1.0)
 
 
-def _augment_arrow(mode: str, factor: float, snr_db: float, seed: int):
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from bdqc_spark.functions.audio import CODECS, decode_arrow_slice, encode
-        from bdqc_spark.plans.profile import _binary_buffers
-
-        for batch in batches:
-            n = batch.num_rows
-            barr = batch.column(batch.schema.get_field_index("bytes"))
-            offsets, data = _binary_buffers(barr)
-            nulls = pa.compute.is_null(barr).to_numpy(zero_copy_only=False)
-            codec = batch.column(batch.schema.get_field_index("codec")).to_pylist()
-            sr_arr = batch.column(batch.schema.get_field_index("sr_hz"))
-            sr_null = pa.compute.is_null(sr_arr).to_numpy(zero_copy_only=False)
-            sr = sr_arr.to_numpy(zero_copy_only=False)
-            cid = batch.column(batch.schema.get_field_index("clip_id")).to_pylist()
-
-            ok = np.zeros(n, dtype=bool)
-            n_samples = np.zeros(n, dtype=np.int32)
-            dur_ms = np.zeros(n, dtype=np.int32)
-            payload: list = [None] * n
-            for i in range(n):
-                if nulls[i] or codec[i] not in CODECS or sr_null[i] or not (sr[i] > 0):
-                    continue
-                try:
-                    pcm = decode_arrow_slice(
-                        data, int(offsets[i]), int(offsets[i + 1]), codec[i]
-                    )
-                    if mode == "speed":
-                        out = speed_perturb(pcm, int(sr[i]), factor)
-                    elif mode == "tempo":
-                        out = time_stretch(pcm, int(sr[i]), factor)
-                    else:
-                        rng = np.random.default_rng([seed, _stable_row_key(cid[i])])
-                        out = mix_noise(pcm, snr_db, rng)
-                except (ValueError, TypeError):
-                    continue
-                ok[i] = True
-                n_samples[i] = out.shape[0]
-                dur_ms[i] = int(round(out.shape[0] * 1000.0 / sr[i]))
-                payload[i] = encode(out, "pcm_s16le")
-
-            passthrough = {
-                name: batch.column(batch.schema.get_field_index(name))
-                for name in batch.schema.names
-                if name not in ("bytes", "sr_hz", "codec", "dur_ms")
-            }
-            yield pa.RecordBatch.from_pydict(
-                {
-                    **passthrough,
-                    "bytes": pa.array(payload, pa.binary()),
-                    "sr_hz": pa.array(
-                        np.where(ok, sr, 0).astype(np.int32), pa.int32()
-                    ),
-                    "codec": pa.array(
-                        ["pcm_s16le" if o else None for o in ok], pa.string()
-                    ),
-                    "augment_ok": pa.array(ok),
-                    "n_samples": pa.array(n_samples, pa.int32()),
-                    "dur_ms": pa.array(dur_ms, pa.int32()),
-                }
-            )
-
-    return run
+def _augment_signal(
+    pcm: np.ndarray, sr: int, clip_id: str, mode: str, factor: float, snr_db: float, seed: int
+) -> dict:
+    if mode == "speed":
+        out = speed_perturb(pcm, sr, factor)
+    elif mode == "tempo":
+        out = time_stretch(pcm, sr, factor)
+    else:
+        rng = np.random.default_rng([seed, _stable_row_key(clip_id)])
+        out = mix_noise(pcm, snr_db, rng)
+    return {
+        **_rewritten(out, sr),
+        "n_samples": out.shape[0],
+        "dur_ms": int(round(out.shape[0] * 1000.0 / sr)),
+    }
 
 
-def _out_schema(clips) -> str:
-    return ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in clips.schema.fields
-        if f.name not in ("bytes", "sr_hz", "codec", "dur_ms")
-    )
+def _augment(clips, mode: str, factor: float, snr_db: float, seed: int):
+    fn = partial(_augment_signal, mode=mode, factor=factor, snr_db=snr_db, seed=seed)
+    return signal_pass(clips, fn, AUGMENT_FIELDS, "augment_ok", extra=("clip_id",))
 
 
 def augment_speed(clips, factor: float = 1.1):
@@ -211,9 +163,7 @@ def augment_speed(clips, factor: float = 1.1):
     Corrupt rows degrade to augment_ok=false with null payload."""
     if factor <= 0:
         raise ValueError(f"speed factor must be positive, got {factor}")
-    return clips.mapInArrow(
-        _augment_arrow("speed", factor, 0.0, 0), f"{_out_schema(clips)}, {AUGMENT_FIELDS}"
-    )
+    return _augment(clips, "speed", factor, 0.0, 0)
 
 
 def augment_tempo(clips, rate: float = 1.1):
@@ -223,9 +173,7 @@ def augment_tempo(clips, rate: float = 1.1):
     re-encoded pcm_s16le, corrupt rows degrade to augment_ok=false."""
     if rate <= 0:
         raise ValueError(f"stretch rate must be positive, got {rate}")
-    return clips.mapInArrow(
-        _augment_arrow("tempo", rate, 0.0, 0), f"{_out_schema(clips)}, {AUGMENT_FIELDS}"
-    )
+    return _augment(clips, "tempo", rate, 0.0, 0)
 
 
 def augment_noise(clips, snr_db: float = 20.0, seed: int = 0):
@@ -233,7 +181,4 @@ def augment_noise(clips, snr_db: float = 20.0, seed: int = 0):
     `snr_db` vs each clip's RMS, re-encoded pcm_s16le. The noise is a
     pure function of (seed, clip_id) — retries, repartitioning and
     cluster size cannot change the augmented corpus."""
-    return clips.mapInArrow(
-        _augment_arrow("noise", 1.0, snr_db, seed),
-        f"{_out_schema(clips)}, {AUGMENT_FIELDS}",
-    )
+    return _augment(clips, "noise", 1.0, snr_db, seed)

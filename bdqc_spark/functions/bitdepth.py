@@ -30,10 +30,11 @@ zero-copy int16 views over the Arrow buffer, only scalars shuffle.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
+
+from bdqc_spark.functions.audio import signal_pass
 
 BD_MIN_SAMPLES = 512  # gcd false-positive odds ~2^-512 on real noise
 REQUANT_BITS_MAX = 12
@@ -57,58 +58,29 @@ def bitdepth_stats(ints: np.ndarray) -> dict | None:
     }
 
 
-_BD_FIELDS = "bd_ok boolean, value_gcd int, effective_bits int, requantized boolean"
+_BD_FIELDS = (
+    ("bd_ok", pa.bool_(), False),
+    ("value_gcd", pa.int32(), 0),
+    ("effective_bits", pa.int32(), 0),
+    ("requantized", pa.bool_(), False),
+)
 
 
-def _bd_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from bdqc_spark.plans.profile import _binary_buffers
+def _s16_samples(data: np.ndarray, start: int, end: int, codec: str) -> np.ndarray:
+    """Zero-copy int16 view of a pcm_s16le payload; the int16 wire
+    domain only (module docstring: honest scope)."""
+    if codec != "pcm_s16le" or (end - start) % 2 != 0:
+        raise ValueError("bit depth needs an even-length pcm_s16le payload")
+    return data[start:end].view("<i2")
 
-    for batch in batches:
-        n = batch.num_rows
-        barr = batch.column(batch.schema.get_field_index("bytes"))
-        offsets, data = _binary_buffers(barr)
-        nulls = pa.compute.is_null(barr).to_numpy(zero_copy_only=False)
-        codec = batch.column(batch.schema.get_field_index("codec")).to_pylist()
 
-        ok = np.zeros(n, dtype=bool)
-        gcd = np.zeros(n, dtype=np.int32)
-        bits = np.zeros(n, dtype=np.int32)
-        req = np.zeros(n, dtype=bool)
-        for i in range(n):
-            # int16 wire domain only (module docstring: honest scope)
-            if nulls[i] or codec[i] != "pcm_s16le":
-                continue
-            lo, hi = int(offsets[i]), int(offsets[i + 1])
-            if (hi - lo) % 2 != 0:
-                continue
-            st = bitdepth_stats(data[lo:hi].view("<i2"))
-            if st is None:
-                continue
-            ok[i] = True
-            gcd[i], bits[i], req[i] = st["value_gcd"], st["effective_bits"], st["requantized"]
-        passthrough = {
-            name: batch.column(batch.schema.get_field_index(name))
-            for name in batch.schema.names
-            if name != "bytes"
-        }
-        yield pa.RecordBatch.from_pydict(
-            {
-                **passthrough,
-                "bd_ok": pa.array(ok),
-                "value_gcd": pa.array(np.where(ok, gcd, 0), type=pa.int32()),
-                "effective_bits": pa.array(np.where(ok, bits, 0), type=pa.int32()),
-                "requantized": pa.array(req),
-            }
-        )
+def _bd_signal(ints: np.ndarray, sr: int | None) -> dict | None:
+    return bitdepth_stats(ints)
 
 
 def clip_bitdepth(clips):
     """clips(bytes, codec, …) → per-clip bit-depth signals. Same
     execution contract as the profile stage (module docstring)."""
-    keep = [f for f in clips.schema.fieldNames() if f != "bytes"]
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in clips.schema if f.name != "bytes"
-    )
-    return clips.mapInArrow(_bd_arrow, f"{out_schema}, {_BD_FIELDS}").select(
-        *keep, "bd_ok", "value_gcd", "effective_bits", "requantized"
+    return signal_pass(
+        clips, _bd_signal, _BD_FIELDS, "bd_ok", need_sr=False, decode=_s16_samples
     )

@@ -25,15 +25,20 @@ channels=1 with the stereo fields null.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 
+from bdqc_spark.functions.audio import _decode_wav, decode_arrow_slice, signal_pass
+
 CHANNEL_FIELDS = (
-    "chan_ok boolean, channels int, rms_l double, rms_r double, "
-    "balance_db double, lr_corr double, phase_inverted boolean, "
-    "downmix_loss_db double"
+    ("chan_ok", pa.bool_(), False),
+    ("channels", pa.int32(), None),
+    ("rms_l", pa.float64(), None),
+    ("rms_r", pa.float64(), None),
+    ("balance_db", pa.float64(), None),
+    ("lr_corr", pa.float64(), None),
+    ("phase_inverted", pa.bool_(), None),
+    ("downmix_loss_db", pa.float64(), None),
 )
 
 _EPS = 1e-12
@@ -83,73 +88,31 @@ def channel_stats(x: np.ndarray) -> dict:
     return out
 
 
-def _channels_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from bdqc_spark.functions.audio import CODECS, _decode_wav, decode_arrow_slice
-    from bdqc_spark.plans.profile import _binary_buffers
+def _decode_channels(data: np.ndarray, start: int, end: int, codec: str) -> np.ndarray:
+    """(n_frames, channels) float32 samples, channels kept apart."""
+    if codec == "wav":
+        return _decode_wav(data, start, end, downmix=False)
+    if codec == "flac":  # may be stereo too
+        from bdqc_spark.functions.flac import flac_decode_channels_i16
 
-    for batch in batches:
-        n = batch.num_rows
-        barr = batch.column(batch.schema.get_field_index("bytes"))
-        offsets, data = _binary_buffers(barr)
-        nulls = pa.compute.is_null(barr).to_numpy(zero_copy_only=False)
-        codec = batch.column(batch.schema.get_field_index("codec")).to_pylist()
-        cid = batch.column(batch.schema.get_field_index("clip_id")).to_pylist()
+        xi, _sr = flac_decode_channels_i16(bytes(data[start:end]))
+        return xi.astype(np.float32) / np.float32(32767.0)
+    # the remaining codecs are raw mono payloads
+    return decode_arrow_slice(data, start, end, codec).reshape(-1, 1)
 
-        rows: list[dict] = []
-        for i in range(n):
-            rec: dict = {
-                "clip_id": cid[i],
-                "chan_ok": False,
-                "channels": None,
-                "rms_l": None,
-                "rms_r": None,
-                "balance_db": None,
-                "lr_corr": None,
-                "phase_inverted": None,
-                "downmix_loss_db": None,
-            }
-            if not nulls[i] and codec[i] in CODECS:
-                try:
-                    if codec[i] == "wav":
-                        x = _decode_wav(
-                            data, int(offsets[i]), int(offsets[i + 1]), downmix=False
-                        )
-                    elif codec[i] == "flac":  # may be stereo too
-                        from bdqc_spark.functions.flac import (
-                            flac_decode_channels_i16,
-                        )
 
-                        xi, _sr = flac_decode_channels_i16(
-                            bytes(data[int(offsets[i]) : int(offsets[i + 1])])
-                        )
-                        x = xi.astype(np.float32) / np.float32(32767.0)
-                    else:  # the remaining codecs are raw mono payloads
-                        x = decode_arrow_slice(
-                            data, int(offsets[i]), int(offsets[i + 1]), codec[i]
-                        ).reshape(-1, 1)
-                    rec.update(channel_stats(x))
-                    rec["chan_ok"] = True
-                except (ValueError, TypeError):
-                    pass
-            rows.append(rec)
-        types = {
-            "clip_id": pa.string(),
-            "chan_ok": pa.bool_(),
-            "channels": pa.int32(),
-            "rms_l": pa.float64(),
-            "rms_r": pa.float64(),
-            "balance_db": pa.float64(),
-            "lr_corr": pa.float64(),
-            "phase_inverted": pa.bool_(),
-            "downmix_loss_db": pa.float64(),
-        }
-        yield pa.RecordBatch.from_pydict(
-            {k: pa.array([r[k] for r in rows], t) for k, t in types.items()}
-        )
+def _channel_signal(x: np.ndarray, sr: int | None) -> dict:
+    return channel_stats(x)
 
 
 def clips_channel_stats(clips):
     """clips (clip_id, bytes, codec, ...) → per-clip channel QC."""
-    return clips.select("clip_id", "bytes", "codec").mapInArrow(
-        _channels_arrow, f"clip_id string, {CHANNEL_FIELDS}"
+    return signal_pass(
+        clips.select("clip_id", "bytes", "codec"),
+        _channel_signal,
+        CHANNEL_FIELDS,
+        "chan_ok",
+        drop=("codec",),
+        need_sr=False,
+        decode=_decode_channels,
     )

@@ -33,10 +33,10 @@ and Spark↔numpy parity are pytest-gated in tests/test_clipping.py.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
+
+from bdqc_spark.functions.audio import signal_pass
 
 # one LSB below int16 full scale, in the decoder's float domain
 # (decode divides by 32767, so the -32768 rail lands at -1.00003)
@@ -109,84 +109,25 @@ def dropout_stats(pcm: np.ndarray, sr: int) -> dict | None:
 
 
 _CL_FIELDS = (
-    "clip_ok boolean, clipped_frac double, max_clip_run int, "
-    "crest_db double, dc_offset double, "
-    "n_dropouts int, max_dropout_ms double, dropout_frac double"
+    ("clip_ok", pa.bool_(), False),
+    ("clipped_frac", pa.float64(), np.nan),
+    ("max_clip_run", pa.int32(), 0),
+    ("crest_db", pa.float64(), np.nan),
+    ("dc_offset", pa.float64(), np.nan),
+    ("n_dropouts", pa.int32(), 0),
+    ("max_dropout_ms", pa.float64(), np.nan),
+    ("dropout_frac", pa.float64(), np.nan),
 )
 
 
-def _clipping_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from bdqc_spark.functions.audio import CODECS, decode_arrow_slice
-    from bdqc_spark.plans.profile import _binary_buffers
-
-    for batch in batches:
-        n = batch.num_rows
-        barr = batch.column(batch.schema.get_field_index("bytes"))
-        offsets, data = _binary_buffers(barr)
-        nulls = pa.compute.is_null(barr).to_numpy(zero_copy_only=False)
-        codec = batch.column(batch.schema.get_field_index("codec")).to_pylist()
-        sr_arr = batch.column(batch.schema.get_field_index("sr_hz"))
-        sr_null = pa.compute.is_null(sr_arr).to_numpy(zero_copy_only=False)
-        sr = sr_arr.to_numpy(zero_copy_only=False)
-
-        ok = np.zeros(n, dtype=bool)
-        frac = np.full(n, np.nan)
-        run = np.zeros(n, dtype=np.int32)
-        crest = np.full(n, np.nan)
-        dc = np.full(n, np.nan)
-        ndrop = np.zeros(n, dtype=np.int32)
-        maxdrop = np.full(n, np.nan)
-        dropfrac = np.full(n, np.nan)
-        for i in range(n):
-            if nulls[i] or codec[i] not in CODECS:
-                continue
-            try:
-                pcm = decode_arrow_slice(data, int(offsets[i]), int(offsets[i + 1]), codec[i])
-                st = clipping_stats(pcm)
-            except (ValueError, TypeError):
-                continue
-            if st is None:
-                continue
-            ok[i] = True
-            frac[i] = st["clipped_frac"]
-            run[i] = st["max_clip_run"]
-            if st["crest_db"] is not None:
-                crest[i] = st["crest_db"]
-            dc[i] = st["dc_offset"]
-            if not sr_null[i] and sr[i] > 0:
-                ds = dropout_stats(pcm, int(sr[i]))
-                if ds is not None:
-                    ndrop[i] = ds["n_dropouts"]
-                    maxdrop[i] = ds["max_dropout_ms"]
-                    dropfrac[i] = ds["dropout_frac"]
-        passthrough = {
-            name: batch.column(batch.schema.get_field_index(name))
-            for name in batch.schema.names
-            if name != "bytes"
-        }
-        yield pa.RecordBatch.from_pydict(
-            {
-                **passthrough,
-                "clip_ok": pa.array(ok),
-                "clipped_frac": pa.array(frac),
-                "max_clip_run": pa.array(run),
-                "crest_db": pa.array(crest),
-                "dc_offset": pa.array(dc),
-                "n_dropouts": pa.array(ndrop),
-                "max_dropout_ms": pa.array(maxdrop),
-                "dropout_frac": pa.array(dropfrac),
-            }
-        )
+def _clipping_signal(pcm: np.ndarray, sr: int | None) -> dict | None:
+    st = clipping_stats(pcm)
+    if st is None or sr is None:  # dropouts need a valid sr_hz
+        return st
+    return {**st, **(dropout_stats(pcm, sr) or {})}
 
 
 def clip_clipping(clips):
     """clips(bytes, codec, …) → per-clip clipping/dynamics signals.
     Same execution contract as the profile stage (module docstring)."""
-    keep = [f for f in clips.schema.fieldNames() if f != "bytes"]
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in clips.schema if f.name != "bytes"
-    )
-    return clips.mapInArrow(_clipping_arrow, f"{out_schema}, {_CL_FIELDS}").select(
-        *keep, "clip_ok", "clipped_frac", "max_clip_run", "crest_db", "dc_offset",
-        "n_dropouts", "max_dropout_ms", "dropout_frac",
-    )
+    return signal_pass(clips, _clipping_signal, _CL_FIELDS, "clip_ok", need_sr=False)

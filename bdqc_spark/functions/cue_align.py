@@ -29,17 +29,21 @@ map-side — only scalars shuffle.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 
-from bdqc_spark.functions.audio import VAD_FRAME_MS, VAD_RMS_MIN
+from bdqc_spark.functions.audio import VAD_FRAME_MS, VAD_RMS_MIN, signal_pass
 
 CUE_ALIGN_FIELDS = (
-    "align_ok boolean, n_cues int, speech_frac double, cue_frac double, "
-    "cue_precision double, cue_recall double, offset_ms int, "
-    "cue_precision_aligned double, cue_recall_aligned double"
+    ("align_ok", pa.bool_(), False),
+    ("n_cues", pa.int32(), 0),
+    ("speech_frac", pa.float64(), np.nan),
+    ("cue_frac", pa.float64(), np.nan),
+    ("cue_precision", pa.float64(), np.nan),
+    ("cue_recall", pa.float64(), np.nan),
+    ("offset_ms", pa.int32(), 0),
+    ("cue_precision_aligned", pa.float64(), np.nan),
+    ("cue_recall_aligned", pa.float64(), np.nan),
 )
 
 
@@ -119,86 +123,17 @@ def cue_alignment_stats(
     }
 
 
-def _align_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from bdqc_spark.functions.audio import CODECS, decode_arrow_slice
-    from bdqc_spark.plans.profile import _binary_buffers
-
-    for batch in batches:
-        n = batch.num_rows
-        barr = batch.column(batch.schema.get_field_index("bytes"))
-        offsets, data = _binary_buffers(barr)
-        nulls = pa.compute.is_null(barr).to_numpy(zero_copy_only=False)
-        codec = batch.column(batch.schema.get_field_index("codec")).to_pylist()
-        sr_arr = batch.column(batch.schema.get_field_index("sr_hz"))
-        sr_null = pa.compute.is_null(sr_arr).to_numpy(zero_copy_only=False)
-        sr = sr_arr.to_numpy(zero_copy_only=False)
-        subs = batch.column(batch.schema.get_field_index("subtitle")).to_pylist()
-
-        ok = np.zeros(n, dtype=bool)
-        n_cues = np.zeros(n, dtype=np.int32)
-        cols = {
-            k: np.full(n, np.nan)
-            for k in (
-                "speech_frac", "cue_frac", "cue_precision", "cue_recall",
-                "cue_precision_aligned", "cue_recall_aligned",
-            )
-        }
-        offset = np.zeros(n, dtype=np.int32)
-        for i in range(n):
-            if (
-                nulls[i]
-                or codec[i] not in CODECS
-                or sr_null[i]
-                or not (sr[i] > 0)
-                or subs[i] is None
-            ):
-                continue
-            try:
-                pcm = decode_arrow_slice(data, int(offsets[i]), int(offsets[i + 1]), codec[i])
-                st = cue_alignment_stats(pcm, int(sr[i]), subs[i])
-            except (ValueError, TypeError):
-                continue
-            if st is None:
-                continue
-            ok[i] = True
-            n_cues[i] = st["n_cues"]
-            offset[i] = st["offset_ms"]
-            for k in cols:
-                cols[k][i] = round(st[k], 6)
-        passthrough = {
-            name: batch.column(batch.schema.get_field_index(name))
-            for name in batch.schema.names
-            if name not in ("bytes", "subtitle")
-        }
-        yield pa.RecordBatch.from_pydict(
-            {
-                **passthrough,
-                "align_ok": pa.array(ok),
-                "n_cues": pa.array(n_cues),
-                "speech_frac": pa.array(cols["speech_frac"]),
-                "cue_frac": pa.array(cols["cue_frac"]),
-                "cue_precision": pa.array(cols["cue_precision"]),
-                "cue_recall": pa.array(cols["cue_recall"]),
-                "offset_ms": pa.array(offset),
-                "cue_precision_aligned": pa.array(cols["cue_precision_aligned"]),
-                "cue_recall_aligned": pa.array(cols["cue_recall_aligned"]),
-            }
-        )
+def _cue_signal(pcm: np.ndarray, sr: int, subtitle: str | None) -> dict | None:
+    st = cue_alignment_stats(pcm, sr, subtitle)
+    if st is None:
+        return None
+    return {k: v if k in ("n_cues", "offset_ms") else round(v, 6) for k, v in st.items()}
 
 
 def cue_alignment(clips) -> "DataFrame":  # noqa: F821
     """clips(bytes, codec, sr_hz, subtitle, …) → per-clip cue↔speech
     alignment metrics. Rows without decodable audio or parseable cues
     get align_ok=false."""
-    keep = [f for f in clips.schema.fieldNames() if f not in ("bytes", "subtitle")]
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in clips.schema
-        if f.name not in ("bytes", "subtitle")
-    )
-    return clips.mapInArrow(_align_arrow, f"{out_schema}, {CUE_ALIGN_FIELDS}").select(
-        *keep,
-        "align_ok", "n_cues", "speech_frac", "cue_frac",
-        "cue_precision", "cue_recall", "offset_ms",
-        "cue_precision_aligned", "cue_recall_aligned",
+    return signal_pass(
+        clips, _cue_signal, CUE_ALIGN_FIELDS, "align_ok", extra=("subtitle",), drop=("subtitle",)
     )

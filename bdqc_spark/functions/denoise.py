@@ -37,11 +37,12 @@ a partitioned sink in the same stage, it never crosses a shuffle.
 
 from __future__ import annotations
 
-from typing import Iterator
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
 
+from bdqc_spark.functions.audio import signal_pass
 from bdqc_spark.functions.snr import snr_stats
 
 # Over-subtraction factor. Per-bin noise power is ~exponential around
@@ -131,88 +132,34 @@ def denoise_pcm(pcm: np.ndarray, sr: int) -> tuple[np.ndarray, dict] | None:
 
 
 _DN_FIELDS = (
-    "denoise_ok boolean, noise_dbfs_before double, noise_dbfs_after double, "
-    "noise_reduction_db double, snr_db_before double, snr_db_after double"
+    ("denoise_ok", pa.bool_(), False),
+    ("noise_dbfs_before", pa.float64(), np.nan),
+    ("noise_dbfs_after", pa.float64(), np.nan),
+    ("noise_reduction_db", pa.float64(), np.nan),
+    ("snr_db_before", pa.float64(), np.nan),
+    ("snr_db_after", pa.float64(), np.nan),
 )
 
 
-def _denoise_arrow(emit_bytes: bool):
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from bdqc_spark.functions.audio import CODECS, decode_arrow_slice
-        from bdqc_spark.plans.profile import _binary_buffers
-
-        for batch in batches:
-            n = batch.num_rows
-            barr = batch.column(batch.schema.get_field_index("bytes"))
-            offsets, data = _binary_buffers(barr)
-            nulls = pa.compute.is_null(barr).to_numpy(zero_copy_only=False)
-            codec = batch.column(batch.schema.get_field_index("codec")).to_pylist()
-            sr_arr = batch.column(batch.schema.get_field_index("sr_hz"))
-            sr_null = pa.compute.is_null(sr_arr).to_numpy(zero_copy_only=False)
-            sr = sr_arr.to_numpy(zero_copy_only=False)
-
-            ok = np.zeros(n, dtype=bool)
-            nb = np.full(n, np.nan)
-            na = np.full(n, np.nan)
-            red = np.full(n, np.nan)
-            s0 = np.full(n, np.nan)
-            s1 = np.full(n, np.nan)
-            out_pcm: list[bytes | None] = [None] * n
-            for i in range(n):
-                if nulls[i] or codec[i] not in CODECS or sr_null[i] or not (sr[i] > 0):
-                    continue
-                try:
-                    pcm = decode_arrow_slice(data, int(offsets[i]), int(offsets[i + 1]), codec[i])
-                    res = denoise_pcm(pcm, int(sr[i]))
-                except (ValueError, TypeError):
-                    continue
-                if res is None:
-                    continue
-                y, st = res
-                ok[i] = True
-                nb[i] = st["noise_dbfs_before"]
-                na[i] = st["noise_dbfs_after"]
-                red[i] = st["noise_reduction_db"]
-                b = snr_stats(pcm, int(sr[i]))
-                a = snr_stats(y, int(sr[i]))
-                if b is not None:
-                    s0[i] = b["snr_db"]
-                if a is not None:
-                    s1[i] = a["snr_db"]
-                if emit_bytes:
-                    q = np.clip(np.round(y.astype(np.float64) * 32767.0), -32768, 32767)
-                    out_pcm[i] = q.astype("<i2").tobytes()
-            passthrough = {
-                name: batch.column(batch.schema.get_field_index(name))
-                for name in batch.schema.names
-                if name != "bytes"
-            }
-            cols = {
-                **passthrough,
-                "denoise_ok": pa.array(ok),
-                "noise_dbfs_before": pa.array(nb),
-                "noise_dbfs_after": pa.array(na),
-                "noise_reduction_db": pa.array(red),
-                "snr_db_before": pa.array(s0),
-                "snr_db_after": pa.array(s1),
-            }
-            if emit_bytes:
-                cols["denoised_bytes"] = pa.array(out_pcm, type=pa.binary())
-            yield pa.RecordBatch.from_pydict(cols)
-
-    return gen
+def _denoise_signal(pcm: np.ndarray, sr: int, emit_bytes: bool) -> dict | None:
+    res = denoise_pcm(pcm, sr)
+    if res is None:
+        return None
+    y, st = res
+    b, a = snr_stats(pcm, sr), snr_stats(y, sr)
+    st["snr_db_before"] = None if b is None else b["snr_db"]
+    st["snr_db_after"] = None if a is None else a["snr_db"]
+    if emit_bytes:
+        q = np.clip(np.round(y.astype(np.float64) * 32767.0), -32768, 32767)
+        st["denoised_bytes"] = q.astype("<i2").tobytes()
+    return st
 
 
 def clip_denoise(clips, emit_bytes: bool = False):
     """clips(bytes, codec, sr_hz, …) → per-clip denoise signals; with
     ``emit_bytes`` also the denoised pcm_s16le payload (sink-side
     rewriting — write it in the same stage, never shuffle it)."""
-    keep = [f for f in clips.schema.fieldNames() if f != "bytes"]
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in clips.schema if f.name != "bytes"
-    )
-    fields = _DN_FIELDS + (", denoised_bytes binary" if emit_bytes else "")
-    extra = [c.strip().split(" ")[0] for c in fields.split(",")]
-    return clips.mapInArrow(_denoise_arrow(emit_bytes), f"{out_schema}, {fields}").select(
-        *keep, *extra
+    fields = _DN_FIELDS + ((("denoised_bytes", pa.binary(), None),) if emit_bytes else ())
+    return signal_pass(
+        clips, partial(_denoise_signal, emit_bytes=emit_bytes), fields, "denoise_ok"
     )

@@ -23,10 +23,10 @@ scalars shuffle.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
+
+from bdqc_spark.functions.audio import signal_pass
 
 LOOP_FRAME_MS = 20
 LOOP_MIN_LAG_S = 1.0
@@ -82,62 +82,15 @@ def loop_stats(pcm: np.ndarray, sr: int) -> dict | None:
     }
 
 
-_LOOP_FIELDS = "loop_ok boolean, loop_score double, loop_lag_ms int, looped boolean"
-
-
-def _loop_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from bdqc_spark.functions.audio import CODECS, decode_arrow_slice
-    from bdqc_spark.plans.profile import _binary_buffers
-
-    for batch in batches:
-        n = batch.num_rows
-        barr = batch.column(batch.schema.get_field_index("bytes"))
-        offsets, data = _binary_buffers(barr)
-        nulls = pa.compute.is_null(barr).to_numpy(zero_copy_only=False)
-        codec = batch.column(batch.schema.get_field_index("codec")).to_pylist()
-        sr_arr = batch.column(batch.schema.get_field_index("sr_hz"))
-        sr_null = pa.compute.is_null(sr_arr).to_numpy(zero_copy_only=False)
-        sr = sr_arr.to_numpy(zero_copy_only=False)
-
-        ok = np.zeros(n, dtype=bool)
-        score = np.full(n, np.nan)
-        lag = np.zeros(n, dtype=np.int32)
-        looped = np.zeros(n, dtype=bool)
-        for i in range(n):
-            if nulls[i] or codec[i] not in CODECS or sr_null[i] or not (sr[i] > 0):
-                continue
-            try:
-                pcm = decode_arrow_slice(data, int(offsets[i]), int(offsets[i + 1]), codec[i])
-                st = loop_stats(pcm, int(sr[i]))
-            except (ValueError, TypeError):
-                continue
-            if st is None:
-                continue
-            ok[i] = True
-            score[i], lag[i], looped[i] = st["loop_score"], st["loop_lag_ms"], st["looped"]
-        passthrough = {
-            name: batch.column(batch.schema.get_field_index(name))
-            for name in batch.schema.names
-            if name != "bytes"
-        }
-        yield pa.RecordBatch.from_pydict(
-            {
-                **passthrough,
-                "loop_ok": pa.array(ok),
-                "loop_score": pa.array(score),
-                "loop_lag_ms": pa.array(lag, type=pa.int32()),
-                "looped": pa.array(looped),
-            }
-        )
+_LOOP_FIELDS = (
+    ("loop_ok", pa.bool_(), False),
+    ("loop_score", pa.float64(), np.nan),
+    ("loop_lag_ms", pa.int32(), 0),
+    ("looped", pa.bool_(), False),
+)
 
 
 def clip_loops(clips):
     """clips(bytes, codec, sr_hz, …) → per-clip loop signals. Same
     execution contract as the profile stage (module docstring)."""
-    keep = [f for f in clips.schema.fieldNames() if f != "bytes"]
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in clips.schema if f.name != "bytes"
-    )
-    return clips.mapInArrow(_loop_arrow, f"{out_schema}, {_LOOP_FIELDS}").select(
-        *keep, "loop_ok", "loop_score", "loop_lag_ms", "looped"
-    )
+    return signal_pass(clips, loop_stats, _LOOP_FIELDS, "loop_ok")

@@ -27,10 +27,10 @@ over-compressed clips), not a sample-exact codec path.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
+
+from bdqc_spark.functions.audio import signal_pass
 
 # analog prototype constants (public derivation of the BS.1770 filter)
 _SHELF_F0 = 1681.974450955533
@@ -141,51 +141,12 @@ def loudness_stats(pcm: np.ndarray, sr: int) -> dict:
     }
 
 
-_LOUDNESS_FIELDS = "loud_ok boolean, lufs double, peak_dbfs double, crest_db double"
-
-
-def _loudness_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from bdqc_spark.functions.audio import CODECS, decode_arrow_slice
-    from bdqc_spark.plans.profile import _binary_buffers
-
-    for batch in batches:
-        n = batch.num_rows
-        barr = batch.column(batch.schema.get_field_index("bytes"))
-        offsets, data = _binary_buffers(barr)
-        nulls = pa.compute.is_null(barr).to_numpy(zero_copy_only=False)
-        codec = batch.column(batch.schema.get_field_index("codec")).to_pylist()
-        sr_arr = batch.column(batch.schema.get_field_index("sr_hz"))
-        sr_null = pa.compute.is_null(sr_arr).to_numpy(zero_copy_only=False)
-        sr = sr_arr.to_numpy(zero_copy_only=False)
-
-        ok = np.zeros(n, dtype=bool)
-        lufs = np.full(n, -np.inf)
-        peak = np.full(n, -np.inf)
-        crest = np.full(n, np.nan)
-        for i in range(n):
-            if nulls[i] or codec[i] not in CODECS or sr_null[i] or not (sr[i] > 0):
-                continue
-            try:
-                pcm = decode_arrow_slice(data, int(offsets[i]), int(offsets[i + 1]), codec[i])
-            except (ValueError, TypeError):
-                continue
-            st = loudness_stats(pcm, int(sr[i]))
-            ok[i] = True
-            lufs[i], peak[i], crest[i] = st["lufs"], st["peak_dbfs"], st["crest_db"]
-        passthrough = {
-            name: batch.column(batch.schema.get_field_index(name))
-            for name in batch.schema.names
-            if name != "bytes"
-        }
-        yield pa.RecordBatch.from_pydict(
-            {
-                **passthrough,
-                "loud_ok": pa.array(ok),
-                "lufs": pa.array(lufs),
-                "peak_dbfs": pa.array(peak),
-                "crest_db": pa.array(crest),
-            }
-        )
+_LOUDNESS_FIELDS = (
+    ("loud_ok", pa.bool_(), False),
+    ("lufs", pa.float64(), -np.inf),
+    ("peak_dbfs", pa.float64(), -np.inf),
+    ("crest_db", pa.float64(), np.nan),
+)
 
 
 def clip_loudness(clips):
@@ -193,12 +154,4 @@ def clip_loudness(clips):
     Same execution contract as the profile stage: one mapInArrow
     pass over the scan, zero-copy Arrow buffers, `bytes` never
     leaves the stage."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    keep = [f for f in clips.schema.fieldNames() if f != "bytes"]
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in clips.schema if f.name != "bytes"
-    )
-    return clips.mapInArrow(
-        _loudness_arrow, f"{out_schema}, {_LOUDNESS_FIELDS}"
-    ).select(*keep, "loud_ok", "lufs", "peak_dbfs", "crest_db")
+    return signal_pass(clips, loudness_stats, _LOUDNESS_FIELDS, "loud_ok")

@@ -35,10 +35,10 @@ stage — only four scalars per clip shuffle.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
+
+from bdqc_spark.functions.audio import signal_pass
 
 MUS_FRAME_MS = 20
 MUS_MIN_FRAMES = 75  # >= 1.5 s of evidence at 20 ms frames: below that
@@ -95,69 +95,15 @@ def music_stats(pcm: np.ndarray, sr: int) -> dict | None:
 
 
 _MUSIC_FIELDS = (
-    "music_ok boolean, mod_ratio_2_8hz double, low_energy_frac double, "
-    "spectral_flux double, music_like boolean"
+    ("music_ok", pa.bool_(), False),
+    ("mod_ratio_2_8hz", pa.float64(), np.nan),
+    ("low_energy_frac", pa.float64(), np.nan),
+    ("spectral_flux", pa.float64(), np.nan),
+    ("music_like", pa.bool_(), False),
 )
-
-
-def _music_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from bdqc_spark.functions.audio import CODECS, decode_arrow_slice
-    from bdqc_spark.plans.profile import _binary_buffers
-
-    for batch in batches:
-        n = batch.num_rows
-        barr = batch.column(batch.schema.get_field_index("bytes"))
-        offsets, data = _binary_buffers(barr)
-        nulls = pa.compute.is_null(barr).to_numpy(zero_copy_only=False)
-        codec = batch.column(batch.schema.get_field_index("codec")).to_pylist()
-        sr_arr = batch.column(batch.schema.get_field_index("sr_hz"))
-        sr_null = pa.compute.is_null(sr_arr).to_numpy(zero_copy_only=False)
-        sr = sr_arr.to_numpy(zero_copy_only=False)
-
-        ok = np.zeros(n, dtype=bool)
-        mod = np.full(n, np.nan)
-        low = np.full(n, np.nan)
-        flux = np.full(n, np.nan)
-        mus = np.zeros(n, dtype=bool)
-        for i in range(n):
-            if nulls[i] or codec[i] not in CODECS or sr_null[i] or not (sr[i] > 0):
-                continue
-            try:
-                pcm = decode_arrow_slice(data, int(offsets[i]), int(offsets[i + 1]), codec[i])
-                st = music_stats(pcm, int(sr[i]))
-            except (ValueError, TypeError):
-                continue
-            if st is None:
-                continue
-            ok[i] = True
-            mod[i] = st["mod_ratio_2_8hz"]
-            low[i] = st["low_energy_frac"]
-            flux[i] = st["spectral_flux"]
-            mus[i] = st["music_like"]
-        passthrough = {
-            name: batch.column(batch.schema.get_field_index(name))
-            for name in batch.schema.names
-            if name != "bytes"
-        }
-        yield pa.RecordBatch.from_pydict(
-            {
-                **passthrough,
-                "music_ok": pa.array(ok),
-                "mod_ratio_2_8hz": pa.array(mod),
-                "low_energy_frac": pa.array(low),
-                "spectral_flux": pa.array(flux),
-                "music_like": pa.array(mus),
-            }
-        )
 
 
 def clip_music(clips):
     """clips(bytes, codec, sr_hz, …) → per-clip speech/music signals.
     Same execution contract as the profile stage (module docstring)."""
-    keep = [f for f in clips.schema.fieldNames() if f != "bytes"]
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in clips.schema if f.name != "bytes"
-    )
-    return clips.mapInArrow(_music_arrow, f"{out_schema}, {_MUSIC_FIELDS}").select(
-        *keep, "music_ok", "mod_ratio_2_8hz", "low_energy_frac", "spectral_flux", "music_like"
-    )
+    return signal_pass(clips, music_stats, _MUSIC_FIELDS, "music_ok")

@@ -28,12 +28,18 @@ clips can be fixed in place rather than only dropped.
 
 from __future__ import annotations
 
-from typing import Iterator
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
 
-from bdqc_spark.functions.audio import VAD_FRAME_MS, VAD_RMS_MIN
+from bdqc_spark.functions.audio import (
+    _REWRITE_FIELDS,
+    VAD_FRAME_MS,
+    VAD_RMS_MIN,
+    _rewritten,
+    signal_pass,
+)
 from bdqc_spark.functions.loudness import integrated_lufs
 
 TARGET_LUFS_DEFAULT = -23.0  # EBU R128 programme loudness target
@@ -96,126 +102,57 @@ def trim_silence(
     return pcm[start:stop], lead_ms, trail_ms
 
 
-NORMALIZE_FIELDS = (
-    "bytes binary, sr_hz int, codec string, norm_ok boolean, "
-    "lufs_before double, lufs_after double, gain_db double, limited boolean"
+NORMALIZE_FIELDS = _REWRITE_FIELDS + (
+    ("norm_ok", pa.bool_(), False),
+    ("lufs_before", pa.float64(), np.nan),
+    ("lufs_after", pa.float64(), np.nan),
+    ("gain_db", pa.float64(), np.nan),
+    ("limited", pa.bool_(), False),
 )
-TRIM_FIELDS = (
-    "bytes binary, sr_hz int, codec string, trim_ok boolean, "
-    "lead_trim_ms int, trail_trim_ms int, dur_ms_after int"
+TRIM_FIELDS = _REWRITE_FIELDS + (
+    ("trim_ok", pa.bool_(), False),
+    ("lead_trim_ms", pa.int32(), 0),
+    ("trail_trim_ms", pa.int32(), 0),
+    ("dur_ms_after", pa.int32(), 0),
 )
 
 
-def _rewrite_arrow(mode: str, target_lufs: float, pad_ms: int):
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from bdqc_spark.functions.audio import CODECS, decode_arrow_slice, encode
-        from bdqc_spark.plans.profile import _binary_buffers
-
-        for batch in batches:
-            n = batch.num_rows
-            barr = batch.column(batch.schema.get_field_index("bytes"))
-            offsets, data = _binary_buffers(barr)
-            nulls = pa.compute.is_null(barr).to_numpy(zero_copy_only=False)
-            codec = batch.column(batch.schema.get_field_index("codec")).to_pylist()
-            sr_arr = batch.column(batch.schema.get_field_index("sr_hz"))
-            sr_null = pa.compute.is_null(sr_arr).to_numpy(zero_copy_only=False)
-            sr = sr_arr.to_numpy(zero_copy_only=False)
-
-            ok = np.zeros(n, dtype=bool)
-            payload: list = [None] * n
-            f1 = np.full(n, np.nan)  # lufs_before | lead_trim_ms
-            f2 = np.full(n, np.nan)  # lufs_after  | trail_trim_ms
-            f3 = np.full(n, np.nan)  # gain_db     | dur_ms_after
-            flag = np.zeros(n, dtype=bool)  # limited (normalize only)
-            for i in range(n):
-                if nulls[i] or codec[i] not in CODECS or sr_null[i] or not (sr[i] > 0):
-                    continue
-                try:
-                    pcm = decode_arrow_slice(
-                        data, int(offsets[i]), int(offsets[i + 1]), codec[i]
-                    )
-                    if mode == "normalize":
-                        out, lufs0, gain_db, limited = normalize_gain(
-                            pcm, int(sr[i]), target_lufs
-                        )
-                        f1[i] = lufs0
-                        f2[i] = integrated_lufs(out, int(sr[i]))
-                        f3[i] = gain_db
-                        flag[i] = limited
-                    else:
-                        out, lead, trail = trim_silence(pcm, int(sr[i]), pad_ms)
-                        f1[i] = lead
-                        f2[i] = trail
-                        f3[i] = int(round(out.shape[0] * 1000.0 / sr[i]))
-                except (ValueError, TypeError):
-                    continue
-                ok[i] = True
-                payload[i] = encode(out, "pcm_s16le")
-
-            passthrough = {
-                name: batch.column(batch.schema.get_field_index(name))
-                for name in batch.schema.names
-                if name not in ("bytes", "sr_hz", "codec", "dur_ms")
-            }
-            base = {
-                **passthrough,
-                "bytes": pa.array(payload, pa.binary()),
-                "sr_hz": pa.array(np.where(ok, sr, 0).astype(np.int32), pa.int32()),
-                "codec": pa.array(["pcm_s16le" if o else None for o in ok], pa.string()),
-            }
-            if mode == "normalize":
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        **base,
-                        "norm_ok": pa.array(ok),
-                        "lufs_before": pa.array(f1, pa.float64()),
-                        "lufs_after": pa.array(f2, pa.float64()),
-                        "gain_db": pa.array(f3, pa.float64()),
-                        "limited": pa.array(flag),
-                    }
-                )
-            else:
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        **base,
-                        "trim_ok": pa.array(ok),
-                        "lead_trim_ms": pa.array(
-                            np.nan_to_num(f1).astype(np.int32), pa.int32()
-                        ),
-                        "trail_trim_ms": pa.array(
-                            np.nan_to_num(f2).astype(np.int32), pa.int32()
-                        ),
-                        "dur_ms_after": pa.array(
-                            np.nan_to_num(f3).astype(np.int32), pa.int32()
-                        ),
-                    }
-                )
-
-    return run
+def _normalize_signal(pcm: np.ndarray, sr: int, target_lufs: float) -> dict:
+    out, lufs0, gain_db, limited = normalize_gain(pcm, sr, target_lufs)
+    return {
+        **_rewritten(out, sr),
+        "lufs_before": lufs0,
+        "lufs_after": integrated_lufs(out, sr),
+        "gain_db": gain_db,
+        "limited": limited,
+    }
 
 
-def _out_schema(clips, fields: str) -> str:
-    passthrough = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in clips.schema.fields
-        if f.name not in ("bytes", "sr_hz", "codec", "dur_ms")
-    )
-    return f"{passthrough}, {fields}"
+def _trim_signal(pcm: np.ndarray, sr: int, pad_ms: int) -> dict:
+    out, lead, trail = trim_silence(pcm, sr, pad_ms)
+    return {
+        **_rewritten(out, sr),
+        "lead_trim_ms": lead,
+        "trail_trim_ms": trail,
+        "dur_ms_after": int(round(out.shape[0] * 1000.0 / sr)),
+    }
 
 
 def clip_normalize(clips, target_lufs: float = TARGET_LUFS_DEFAULT):
     """clips(clip_id, bytes, sr_hz, codec, ...) → same rows with
     loudness-normalized pcm_s16le payloads + the gain audit trail."""
-    return clips.mapInArrow(
-        _rewrite_arrow("normalize", target_lufs, 0),
-        _out_schema(clips, NORMALIZE_FIELDS),
+    return signal_pass(
+        clips,
+        partial(_normalize_signal, target_lufs=target_lufs),
+        NORMALIZE_FIELDS,
+        "norm_ok",
+        drop=("dur_ms",),
     )
 
 
 def clip_trim_silence(clips, pad_ms: int = 100):
     """clips(clip_id, bytes, sr_hz, codec, ...) → same rows with
     leading/trailing silence removed (VAD-gated, padded)."""
-    return clips.mapInArrow(
-        _rewrite_arrow("trim", 0.0, pad_ms),
-        _out_schema(clips, TRIM_FIELDS),
+    return signal_pass(
+        clips, partial(_trim_signal, pad_ms=pad_ms), TRIM_FIELDS, "trim_ok", drop=("dur_ms",)
     )

@@ -29,12 +29,10 @@ shuffle.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 
-from bdqc_spark.functions.audio import VAD_RMS_MIN
+from bdqc_spark.functions.audio import VAD_RMS_MIN, signal_pass
 
 F0_MIN = 60.0
 F0_MAX = 400.0
@@ -89,70 +87,15 @@ def pitch_stats(pcm: np.ndarray, sr: int) -> dict | None:
 
 
 _P_FIELDS = (
-    "pitch_ok boolean, voiced_frac double, f0_median_hz double, "
-    "f0_iqr_hz double, n_frames int"
+    ("pitch_ok", pa.bool_(), False),
+    ("voiced_frac", pa.float64(), np.nan),
+    ("f0_median_hz", pa.float64(), np.nan),
+    ("f0_iqr_hz", pa.float64(), np.nan),
+    ("n_frames", pa.int32(), 0),
 )
-
-
-def _pitch_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from bdqc_spark.functions.audio import CODECS, decode_arrow_slice
-    from bdqc_spark.plans.profile import _binary_buffers
-
-    for batch in batches:
-        n = batch.num_rows
-        barr = batch.column(batch.schema.get_field_index("bytes"))
-        offsets, data = _binary_buffers(barr)
-        nulls = pa.compute.is_null(barr).to_numpy(zero_copy_only=False)
-        codec = batch.column(batch.schema.get_field_index("codec")).to_pylist()
-        sr_arr = batch.column(batch.schema.get_field_index("sr_hz"))
-        sr_null = pa.compute.is_null(sr_arr).to_numpy(zero_copy_only=False)
-        sr = sr_arr.to_numpy(zero_copy_only=False)
-
-        ok = np.zeros(n, dtype=bool)
-        vf = np.full(n, np.nan)
-        f0m = np.full(n, np.nan)
-        f0i = np.full(n, np.nan)
-        nfr = np.zeros(n, dtype=np.int32)
-        for i in range(n):
-            if nulls[i] or codec[i] not in CODECS or sr_null[i] or not (sr[i] > 0):
-                continue
-            try:
-                pcm = decode_arrow_slice(data, int(offsets[i]), int(offsets[i + 1]), codec[i])
-                st = pitch_stats(pcm, int(sr[i]))
-            except (ValueError, TypeError):
-                continue
-            if st is None:
-                continue
-            ok[i] = True
-            vf[i] = st["voiced_frac"]
-            nfr[i] = st["n_frames"]
-            if st["f0_median_hz"] is not None:
-                f0m[i] = st["f0_median_hz"]
-                f0i[i] = st["f0_iqr_hz"]
-        passthrough = {
-            name: batch.column(batch.schema.get_field_index(name))
-            for name in batch.schema.names
-            if name != "bytes"
-        }
-        yield pa.RecordBatch.from_pydict(
-            {
-                **passthrough,
-                "pitch_ok": pa.array(ok),
-                "voiced_frac": pa.array(vf),
-                "f0_median_hz": pa.array(f0m),
-                "f0_iqr_hz": pa.array(f0i),
-                "n_frames": pa.array(nfr),
-            }
-        )
 
 
 def clip_pitch(clips):
     """clips(bytes, codec, sr_hz, …) → per-clip F0/voicing signals.
     Same execution contract as the profile stage (module docstring)."""
-    keep = [f for f in clips.schema.fieldNames() if f != "bytes"]
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in clips.schema if f.name != "bytes"
-    )
-    return clips.mapInArrow(_pitch_arrow, f"{out_schema}, {_P_FIELDS}").select(
-        *keep, "pitch_ok", "voiced_frac", "f0_median_hz", "f0_iqr_hz", "n_frames"
-    )
+    return signal_pass(clips, pitch_stats, _P_FIELDS, "pitch_ok")

@@ -21,14 +21,17 @@ single-codec, single-rate corpus.
 
 from __future__ import annotations
 
-from typing import Iterator
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
 
-RESAMPLE_FIELDS = (
-    "bytes binary, sr_hz int, codec string, "
-    "resample_ok boolean, n_samples int, src_sr int"
+from bdqc_spark.functions.audio import _REWRITE_FIELDS, _rewritten, signal_pass
+
+RESAMPLE_FIELDS = _REWRITE_FIELDS + (
+    ("resample_ok", pa.bool_(), False),
+    ("n_samples", pa.int32(), 0),
+    ("src_sr", pa.int32(), 0),
 )
 
 _AA_TAPS = 63  # odd → integer group delay, 'same' convolution is centered
@@ -65,62 +68,9 @@ def resample_linear(pcm: np.ndarray, sr_in: int, sr_out: int) -> np.ndarray:
     return pcm[i0] * (np.float32(1.0) - frac) + pcm[i1] * frac
 
 
-def _resample_arrow(target_sr: int):
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from bdqc_spark.functions.audio import CODECS, decode_arrow_slice, encode
-        from bdqc_spark.plans.profile import _binary_buffers
-
-        for batch in batches:
-            n = batch.num_rows
-            barr = batch.column(batch.schema.get_field_index("bytes"))
-            offsets, data = _binary_buffers(barr)
-            nulls = pa.compute.is_null(barr).to_numpy(zero_copy_only=False)
-            codec = batch.column(batch.schema.get_field_index("codec")).to_pylist()
-            sr_arr = batch.column(batch.schema.get_field_index("sr_hz"))
-            sr_null = pa.compute.is_null(sr_arr).to_numpy(zero_copy_only=False)
-            sr = sr_arr.to_numpy(zero_copy_only=False)
-
-            ok = np.zeros(n, dtype=bool)
-            n_samples = np.zeros(n, dtype=np.int32)
-            src_sr = np.zeros(n, dtype=np.int32)
-            payload: list = [None] * n
-            for i in range(n):
-                if nulls[i] or codec[i] not in CODECS or sr_null[i] or not (sr[i] > 0):
-                    continue
-                try:
-                    pcm = decode_arrow_slice(
-                        data, int(offsets[i]), int(offsets[i + 1]), codec[i]
-                    )
-                    out = resample_linear(pcm, int(sr[i]), target_sr)
-                except (ValueError, TypeError):
-                    continue
-                ok[i] = True
-                n_samples[i] = out.shape[0]
-                src_sr[i] = int(sr[i])
-                payload[i] = encode(out, "pcm_s16le")
-
-            passthrough = {
-                name: batch.column(batch.schema.get_field_index(name))
-                for name in batch.schema.names
-                if name not in ("bytes", "sr_hz", "codec")
-            }
-            yield pa.RecordBatch.from_pydict(
-                {
-                    **passthrough,
-                    "bytes": pa.array(payload, pa.binary()),
-                    "sr_hz": pa.array(
-                        np.where(ok, target_sr, 0).astype(np.int32), pa.int32()
-                    ),
-                    "codec": pa.array(
-                        ["pcm_s16le" if o else None for o in ok], pa.string()
-                    ),
-                    "resample_ok": pa.array(ok),
-                    "n_samples": pa.array(n_samples, pa.int32()),
-                    "src_sr": pa.array(src_sr, pa.int32()),
-                }
-            )
-
-    return run
+def _resample_signal(pcm: np.ndarray, sr: int, target_sr: int) -> dict:
+    out = resample_linear(pcm, sr, target_sr)
+    return {**_rewritten(out, target_sr), "n_samples": out.shape[0], "src_sr": sr}
 
 
 def resample_clips(clips, target_sr: int = 16000):
@@ -129,9 +79,6 @@ def resample_clips(clips, target_sr: int = 16000):
     rows keep null bytes/codec — corrupt inputs degrade, not crash).
     Passthrough columns preserved; the output composes directly with
     profile_clips / extract_audio_features."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in clips.schema.fields
-        if f.name not in ("bytes", "sr_hz", "codec")
+    return signal_pass(
+        clips, partial(_resample_signal, target_sr=target_sr), RESAMPLE_FIELDS, "resample_ok"
     )
-    return clips.mapInArrow(_resample_arrow(target_sr), f"{schema}, {RESAMPLE_FIELDS}")

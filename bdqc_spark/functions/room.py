@@ -33,10 +33,10 @@ recovery) is pytest-gated in tests/test_room.py.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
+
+from bdqc_spark.functions.audio import signal_pass
 
 _EPS = 1e-20
 
@@ -156,81 +156,16 @@ def room_stats(pcm: np.ndarray, sr: int) -> dict | None:
 
 
 _ROOM_FIELDS = (
-    "room_ok boolean, hum_db_50 double, hum_db_60 double, "
-    "decay_db_s double, rt60_est double, n_decays int"
+    ("room_ok", pa.bool_(), False),
+    ("hum_db_50", pa.float64(), np.nan),
+    ("hum_db_60", pa.float64(), np.nan),
+    ("decay_db_s", pa.float64(), np.nan),
+    ("rt60_est", pa.float64(), np.nan),
+    ("n_decays", pa.int32(), 0),
 )
-
-
-def _room_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from bdqc_spark.functions.audio import CODECS, decode_arrow_slice
-    from bdqc_spark.plans.profile import _binary_buffers
-
-    for batch in batches:
-        n = batch.num_rows
-        barr = batch.column(batch.schema.get_field_index("bytes"))
-        offsets, data = _binary_buffers(barr)
-        nulls = pa.compute.is_null(barr).to_numpy(zero_copy_only=False)
-        codec = batch.column(batch.schema.get_field_index("codec")).to_pylist()
-        sr_arr = batch.column(batch.schema.get_field_index("sr_hz"))
-        sr_null = pa.compute.is_null(sr_arr).to_numpy(zero_copy_only=False)
-        sr = sr_arr.to_numpy(zero_copy_only=False)
-
-        ok = np.zeros(n, dtype=bool)
-        hum50 = np.full(n, np.nan)
-        hum60 = np.full(n, np.nan)
-        decay = np.full(n, np.nan)
-        rt60 = np.full(n, np.nan)
-        ndec = np.zeros(n, dtype=np.int32)
-        for i in range(n):
-            if nulls[i] or codec[i] not in CODECS or sr_null[i] or not (sr[i] > 0):
-                continue
-            try:
-                pcm = decode_arrow_slice(data, int(offsets[i]), int(offsets[i + 1]), codec[i])
-                st = room_stats(pcm, int(sr[i]))
-            except (ValueError, TypeError):
-                continue
-            if st is None:
-                continue
-            ok[i] = True
-            if st["hum_db_50"] is not None:
-                hum50[i] = st["hum_db_50"]
-            if st["hum_db_60"] is not None:
-                hum60[i] = st["hum_db_60"]
-            if st["decay_db_s"] is not None:
-                decay[i] = st["decay_db_s"]
-                rt60[i] = st["rt60_est"]
-            ndec[i] = st["n_decays"]
-        passthrough = {
-            name: batch.column(batch.schema.get_field_index(name))
-            for name in batch.schema.names
-            if name != "bytes"
-        }
-        yield pa.RecordBatch.from_pydict(
-            {
-                **passthrough,
-                "room_ok": pa.array(ok),
-                "hum_db_50": pa.array(hum50),
-                "hum_db_60": pa.array(hum60),
-                "decay_db_s": pa.array(decay),
-                "rt60_est": pa.array(rt60),
-                "n_decays": pa.array(ndec, pa.int32()),
-            }
-        )
 
 
 def clip_room(clips):
     """clips(bytes, codec, sr_hz, …) → per-clip room/channel signals.
     Same execution contract as the profile stage (module docstring)."""
-    keep = [f for f in clips.schema.fieldNames() if f != "bytes"]
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in clips.schema if f.name != "bytes"
-    )
-    return clips.mapInArrow(_room_arrow, f"{out_schema}, {_ROOM_FIELDS}").select(
-        *keep,
-        "room_ok",
-        "hum_db_50",
-        "hum_db_60",
-        "decay_db_s",
-        "rt60_est",
-        "n_decays",
-    )
+    return signal_pass(clips, room_stats, _ROOM_FIELDS, "room_ok")

@@ -55,14 +55,6 @@ def scrub_column(c: Column, rules: tuple[ScrubRule, ...] = SCRUB_RULES) -> Colum
     return out
 
 
-def scrub_hits_column(c: Column, rules: tuple[ScrubRule, ...] = SCRUB_RULES) -> Column:
-    """array<string> of rule_ids that fired on this row (sorted)."""
-    hits = [
-        F.when(c.rlike(r.pattern), F.lit(r.rule_id)).otherwise(F.lit(None)) for r in rules
-    ]
-    return F.array_sort(F.filter(F.array(*hits), lambda x: x.isNotNull()))
-
-
 def n_edits_column(c: Column, rules: tuple[ScrubRule, ...] = SCRUB_RULES) -> Column:
     """Total number of replacements across the chain (metrics table
     'scrub edits'). Counted per rule on the progressively scrubbed

@@ -40,11 +40,11 @@ def _segment_arrow(win_ms: int, hop_ms: int):
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from bdqc_spark.functions.audio import (
             CODECS,
+            _binary_buffers,
             _parse_wav,
             decode_arrow_slice,
             encode,
         )
-        from bdqc_spark.plans.profile import _binary_buffers
 
         for batch in batches:
             n = batch.num_rows
@@ -146,9 +146,8 @@ def segment_clips(clips, win_ms: int = 1000, hop_ms: int | None = None):
         hop_ms = win_ms
     if win_ms <= 0 or hop_ms <= 0:
         raise ValueError("win_ms and hop_ms must be positive")
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in clips.schema.fields
-        if f.name != "bytes"
+    from bdqc_spark.functions.audio import _signal_ddl
+
+    return clips.mapInArrow(
+        _segment_arrow(win_ms, hop_ms), f"{_signal_ddl(clips.schema, ())}, {SEGMENT_FIELDS}"
     )
-    return clips.mapInArrow(_segment_arrow(win_ms, hop_ms), f"{schema}, {SEGMENT_FIELDS}")

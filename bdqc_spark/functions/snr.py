@@ -30,12 +30,10 @@ only four scalars shuffle.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 
-from bdqc_spark.functions.audio import VAD_FRAME_MS, VAD_RMS_MIN
+from bdqc_spark.functions.audio import VAD_FRAME_MS, VAD_RMS_MIN, signal_pass
 
 SNR_CAP_DB = 99.0
 _EPS = 1e-12
@@ -86,62 +84,15 @@ def snr_stats(pcm: np.ndarray, sr: int) -> dict | None:
     }
 
 
-_SNR_FIELDS = "snr_ok boolean, snr_db double, noise_dbfs double, active_frac double"
-
-
-def _snr_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from bdqc_spark.functions.audio import CODECS, decode_arrow_slice
-    from bdqc_spark.plans.profile import _binary_buffers
-
-    for batch in batches:
-        n = batch.num_rows
-        barr = batch.column(batch.schema.get_field_index("bytes"))
-        offsets, data = _binary_buffers(barr)
-        nulls = pa.compute.is_null(barr).to_numpy(zero_copy_only=False)
-        codec = batch.column(batch.schema.get_field_index("codec")).to_pylist()
-        sr_arr = batch.column(batch.schema.get_field_index("sr_hz"))
-        sr_null = pa.compute.is_null(sr_arr).to_numpy(zero_copy_only=False)
-        sr = sr_arr.to_numpy(zero_copy_only=False)
-
-        ok = np.zeros(n, dtype=bool)
-        snr = np.full(n, np.nan)
-        noise = np.full(n, np.nan)
-        act = np.full(n, np.nan)
-        for i in range(n):
-            if nulls[i] or codec[i] not in CODECS or sr_null[i] or not (sr[i] > 0):
-                continue
-            try:
-                pcm = decode_arrow_slice(data, int(offsets[i]), int(offsets[i + 1]), codec[i])
-                st = snr_stats(pcm, int(sr[i]))
-            except (ValueError, TypeError):
-                continue
-            if st is None:
-                continue
-            ok[i] = True
-            snr[i], noise[i], act[i] = st["snr_db"], st["noise_dbfs"], st["active_frac"]
-        passthrough = {
-            name: batch.column(batch.schema.get_field_index(name))
-            for name in batch.schema.names
-            if name != "bytes"
-        }
-        yield pa.RecordBatch.from_pydict(
-            {
-                **passthrough,
-                "snr_ok": pa.array(ok),
-                "snr_db": pa.array(snr),
-                "noise_dbfs": pa.array(noise),
-                "active_frac": pa.array(act),
-            }
-        )
+_SNR_FIELDS = (
+    ("snr_ok", pa.bool_(), False),
+    ("snr_db", pa.float64(), np.nan),
+    ("noise_dbfs", pa.float64(), np.nan),
+    ("active_frac", pa.float64(), np.nan),
+)
 
 
 def clip_snr(clips):
     """clips(bytes, codec, sr_hz, …) → per-clip SNR signals. Same
     execution contract as the profile stage (see module docstring)."""
-    keep = [f for f in clips.schema.fieldNames() if f != "bytes"]
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in clips.schema if f.name != "bytes"
-    )
-    return clips.mapInArrow(_snr_arrow, f"{out_schema}, {_SNR_FIELDS}").select(
-        *keep, "snr_ok", "snr_db", "noise_dbfs", "active_frac"
-    )
+    return signal_pass(clips, snr_stats, _SNR_FIELDS, "snr_ok")

@@ -24,6 +24,9 @@ def n_chars(c: Column) -> Column:
 def n_tokens(c: Column) -> Column:
     """Whitespace-delimited token count (token = maximal non-space run).
 
+    NULL text gives NULL (not -1 as the old size(split(...)) form
+    did), so aggregates over it skip the row; "" gives 0.
+
     regexp_count, not size(regexp_extract_all): identical match count
     (same regex, same engine) without materializing an array of all
     token substrings per row — this expression runs once per document

@@ -21,15 +21,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _dot_lit(emb_col, plane: np.ndarray):
-    arr = F.array(*[F.lit(float(v)) for v in plane])
-    return F.aggregate(
-        F.zip_with(emb_col, arr, lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _cosine(a, b):
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),

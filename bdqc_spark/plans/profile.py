@@ -9,8 +9,9 @@ materialized past it (column pruning keeps it out of every
 downstream plan — the single most important property at 100 TB).
 
 Python crossing: exactly ONE `mapInArrow` pass. The audio payloads
-are read as zero-copy numpy views over the Arrow binary buffers
-(bdqc_spark.functions.audio.decode_arrow_slice) — no per-row
+are decoded by the shared audio kernel
+(bdqc_spark.functions.audio._signal_batches) from zero-copy numpy
+views over the Arrow binary buffers — no per-row
 PyBytes objects, no pandas object columns; measured ~2× faster than
 the equivalent pandas UDF on this column (BENCH.md). langid +
 perplexity share the same pass (and its text-encode work). Text
@@ -27,128 +28,86 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bdqc_spark.functions import text as T
-
-_PROFILE_FIELDS = (
-    "pcm_ok boolean, n_samples int, dur_ms_decoded int, rms double, "
-    "peak double, clip_rate double, dc_off double, "
-    "hdr_sr int, speech_ratio double, bw_ratio double, "
-    "lang_pred string, lang_conf double, ppl double"
+from bdqc_spark.functions.audio import (
+    _parse_wav,
+    _signal_batches,
+    _signal_ddl,
+    bandwidth_ratio,
+    speech_ratio,
 )
+from bdqc_spark.functions.flac import _parse_stream_header as _flac_header
+
+_AUDIO_FIELDS = (
+    ("pcm_ok", pa.bool_(), False),
+    ("n_samples", pa.int32(), 0),
+    ("dur_ms_decoded", pa.int32(), 0),
+    ("rms", pa.float64(), 0.0),
+    ("peak", pa.float64(), 0.0),
+    ("clip_rate", pa.float64(), 0.0),
+    ("dc_off", pa.float64(), 0.0),
+    ("hdr_sr", pa.int32(), 0),
+    ("speech_ratio", pa.float64(), 0.0),
+    ("bw_ratio", pa.float64(), 1.0),  # 1.0 = full band / no evidence
+)
+_LANG_FIELDS = "lang_pred string, lang_conf double, ppl double"
 
 
-def _binary_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """(offsets, data) numpy views of an Arrow (large_)binary array."""
-    off_dtype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-    offsets = np.frombuffer(arr.buffers()[1], dtype=off_dtype)[arr.offset : arr.offset + len(arr) + 1]
-    data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
-    return offsets, data
+def _audio_signature(pcm: np.ndarray, sr: int, codec: str, raw: np.ndarray) -> dict:
+    ns = pcm.shape[0]
+    out = {"n_samples": ns, "dur_ms_decoded": int(round(ns * 1000.0 / sr))}
+    if ns:
+        # fused, allocation-free stats (measured 65→32 µs/clip
+        # vs the abs/square temporaries): BLAS dot for the
+        # energy, min/max for peak, count_nonzero for clips.
+        # float32 dot accumulation differs from the float64
+        # mean-of-squares by ~1e-7 relative — orders of
+        # magnitude inside the z≥6 decision margins; the
+        # single-node oracle uses the IDENTICAL formula
+        # (synth/oracle.py) so engine and oracle cannot drift.
+        mx, mn = float(pcm.max()), float(pcm.min())
+        out["rms"] = float(np.sqrt(float(np.dot(pcm, pcm)) / ns))
+        out["peak"] = max(mx, -mn)
+        out["clip_rate"] = (
+            int(np.count_nonzero(pcm >= 0.999)) + int(np.count_nonzero(pcm <= -0.999))
+        ) / ns
+        out["dc_off"] = float(pcm.sum(dtype=np.float64)) / ns
+        out["speech_ratio"] = speech_ratio(pcm, sr)
+        out["bw_ratio"] = bandwidth_ratio(pcm, sr)
+    if codec == "wav":
+        # decode succeeded so the header re-parse cannot fail;
+        # surfaces the container's own sample rate for the
+        # audio.hdr_sr_mismatch catalog cross-check
+        out["hdr_sr"] = _parse_wav(raw, 0, raw.shape[0])["hdr_sr"]
+    elif codec == "flac":
+        # same cross-check from the FLAC STREAMINFO block
+        out["hdr_sr"] = _flac_header(raw)[0]["sr"]
+    return out
 
 
 def _profile_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     # Worker-side imports; models are lru_cached per worker process.
-    from bdqc_spark.functions.audio import (
-        CODECS,
-        _parse_wav,
-        bandwidth_ratio,
-        decode_arrow_slice,
-        speech_ratio,
-    )
-    from bdqc_spark.functions.flac import _parse_stream_header as _flac_header
     from bdqc_spark.functions.langid import predict_batch
     from bdqc_spark.functions.lm import perplexity_batch
 
-    for batch in batches:
-        n = batch.num_rows
-        barr = batch.column(batch.schema.get_field_index("bytes"))
-        offsets, data = _binary_buffers(barr)
-        nulls = pa.compute.is_null(barr).to_numpy(zero_copy_only=False)
-        codec = batch.column(batch.schema.get_field_index("codec")).to_pylist()
-        sr_arr = batch.column(batch.schema.get_field_index("sr_hz"))
-        # null ints surface as NaN after to_numpy — consult the validity
-        # bitmap, not the values (a NaN passes neither `is None` nor `<= 0`)
-        sr_null = pa.compute.is_null(sr_arr).to_numpy(zero_copy_only=False)
-        sr = sr_arr.to_numpy(zero_copy_only=False)
-
-        pcm_ok = np.zeros(n, dtype=bool)
-        n_samples = np.zeros(n, dtype=np.int32)
-        dur_dec = np.zeros(n, dtype=np.int32)
-        rms = np.zeros(n, dtype=np.float64)
-        peak = np.zeros(n, dtype=np.float64)
-        clip_rate = np.zeros(n, dtype=np.float64)
-        dc_off = np.zeros(n, dtype=np.float64)
-        hdr_sr = np.zeros(n, dtype=np.int32)
-        sp_ratio = np.zeros(n, dtype=np.float64)
-        bw = np.ones(n, dtype=np.float64)  # 1.0 = full band / no evidence
-
-        for i in range(n):
-            if nulls[i] or codec[i] not in CODECS or sr_null[i] or not (sr[i] > 0):
-                continue
-            try:
-                pcm = decode_arrow_slice(data, int(offsets[i]), int(offsets[i + 1]), codec[i])
-            except (ValueError, TypeError):
-                continue
-            ns = pcm.shape[0]
-            pcm_ok[i] = True
-            n_samples[i] = ns
-            dur_dec[i] = int(round(ns * 1000.0 / sr[i]))
-            if ns:
-                # fused, allocation-free stats (measured 65→32 µs/clip
-                # vs the abs/square temporaries): BLAS dot for the
-                # energy, min/max for peak, count_nonzero for clips.
-                # float32 dot accumulation differs from the float64
-                # mean-of-squares by ~1e-7 relative — orders of
-                # magnitude inside the z≥6 decision margins; the
-                # single-node oracle uses the IDENTICAL formula
-                # (synth/oracle.py) so engine and oracle cannot drift.
-                mx, mn = float(pcm.max()), float(pcm.min())
-                rms[i] = float(np.sqrt(float(np.dot(pcm, pcm)) / ns))
-                peak[i] = max(mx, -mn)
-                clip_rate[i] = (
-                    int(np.count_nonzero(pcm >= 0.999))
-                    + int(np.count_nonzero(pcm <= -0.999))
-                ) / ns
-                dc_off[i] = float(pcm.sum(dtype=np.float64)) / ns
-                sp_ratio[i] = speech_ratio(pcm, int(sr[i]))
-                bw[i] = bandwidth_ratio(pcm, int(sr[i]))
-            if codec[i] == "wav":
-                # decode succeeded so the header re-parse cannot fail;
-                # surfaces the container's own sample rate for the
-                # audio.hdr_sr_mismatch catalog cross-check
-                hdr_sr[i] = _parse_wav(data, int(offsets[i]), int(offsets[i + 1]))["hdr_sr"]
-            elif codec[i] == "flac":
-                # same cross-check from the FLAC STREAMINFO block
-                hdr_sr[i] = _flac_header(
-                    data[int(offsets[i]) : int(offsets[i + 1])]
-                )[0]["sr"]
-
-        transcripts = batch.column(batch.schema.get_field_index("transcript")).to_pandas()
+    for out in _signal_batches(
+        batches, _audio_signature, _AUDIO_FIELDS, "pcm_ok", extra=("codec", "bytes")
+    ):
+        transcripts = out.column("transcript").to_pandas()
         lang = predict_batch(transcripts)
         ppl = perplexity_batch(transcripts)
-
-        passthrough = {
-            name: batch.column(batch.schema.get_field_index(name))
-            for name in batch.schema.names
-            if name != "bytes"
-        }
-        out = pa.RecordBatch.from_pydict(
-            {
-                **passthrough,
-                "pcm_ok": pa.array(pcm_ok),
-                "n_samples": pa.array(n_samples, pa.int32()),
-                "dur_ms_decoded": pa.array(dur_dec, pa.int32()),
-                "rms": pa.array(rms),
-                "peak": pa.array(peak),
-                "clip_rate": pa.array(clip_rate),
-                "dc_off": pa.array(dc_off),
-                "hdr_sr": pa.array(hdr_sr, pa.int32()),
-                "speech_ratio": pa.array(sp_ratio),
-                "bw_ratio": pa.array(bw),
-                "lang_pred": pa.array(lang["pred"].to_numpy(), pa.string()),
-                "lang_conf": pa.array(lang["conf"].to_numpy(), pa.float64()),
-                "ppl": pa.array(ppl),  # +inf for no-evidence rows (Arrow-safe)
-            }
+        yield pa.RecordBatch.from_arrays(
+            out.columns
+            + [
+                pa.array(lang["pred"].to_numpy(), pa.string()),
+                pa.array(lang["conf"].to_numpy(), pa.float64()),
+                pa.array(ppl),  # +inf for no-evidence rows (Arrow-safe)
+            ],
+            names=out.schema.names + ["lang_pred", "lang_conf", "ppl"],
         )
-        yield out
+
+
+def _profile_ddl(clips: DataFrame) -> str:
+    return f"{_signal_ddl(clips.schema, _AUDIO_FIELDS)}, {_LANG_FIELDS}"
 
 
 def _nest_profile(flat: DataFrame, keep: list[str]) -> DataFrame:
@@ -181,25 +140,13 @@ def profile_clips(clips: DataFrame) -> DataFrame:
                audio struct, text struct, lang struct)
     """
     keep = [c for c in clips.columns if c != "bytes"]
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in clips.schema.fields if f.name != "bytes"
-    )
-    flat = clips.mapInArrow(_profile_arrow, f"{schema}, {_PROFILE_FIELDS}")
+    flat = clips.mapInArrow(_profile_arrow, _profile_ddl(clips))
     return _nest_profile(flat, keep)
 
 
 # --------------------------------------------------------------------------
 # Direct-read fast path: workers read their own parquet files
 # --------------------------------------------------------------------------
-# Split direct-read tasks by row group (True) or whole file (False).
-# Measured on the 200k bench corpus (64 files × 2 row groups,
-# local[32], alternating A/B ×3): splitting does NOT help stage A
-# (5.5-6.0s vs 4.6-5.7s whole-file) and consistently costs stage B
-# ~+2.5s — doubling the checkpoint partition count doubles the
-# per-partition percentile_approx partials the model fit must merge
-# and the per-scan task count of every downstream aggregation.
-# Whole-file tasks win; kept as a flag so the A/B is reproducible.
-_DIRECT_SPLIT_ROW_GROUPS = False
 def direct_scan_files(clips: DataFrame, buckets: list[int] | None = None) -> list | None:
     """[(path, bucket), ...] when `clips` is a PLAIN manifest scan of
     bucket-partitioned parquet (the IcebergishTable.read shape), else
@@ -264,9 +211,6 @@ def profile_clips_direct(spark, files: list, clips: DataFrame) -> DataFrame:
     consumes the bytes is the one that reads them."""
     file_order = [c for c in clips.columns if c != "bucket"]
     keep = [c for c in clips.columns if c != "bytes"]
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in clips.schema.fields if f.name != "bytes"
-    )
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
@@ -274,19 +218,20 @@ def profile_clips_direct(spark, files: list, clips: DataFrame) -> DataFrame:
         for b in batches:
             paths = b.column(0).to_pylist()
             buckets = b.column(1).to_pylist()
-            rgs = b.column(2).to_pylist()
-            for path, bucket, rg in zip(paths, buckets, rgs):
+            for path, bucket in zip(paths, buckets):
                 pf = pq.ParquetFile(path)
                 try:
                     for rb in pf.iter_batches(
-                        batch_size=256,
-                        row_groups=None if rg < 0 else [rg],
-                        columns=file_order,
-                        use_threads=False,
+                        batch_size=256, columns=file_order, use_threads=False
                     ):
-                        # column order pinned to the declared schema
-                        # (passthrough order in _profile_arrow follows
-                        # the input batch's field order)
+                        # Column order pinned to the declared schema
+                        # (passthrough order follows the input batch),
+                        # with `bucket` LAST. That matches `clips`
+                        # because Spark's partitioned read of the table
+                        # always puts the partition column last, even
+                        # when the first append carried `bucket`
+                        # mid-schema (IcebergishTable.read; pinned by
+                        # tests/test_direct_profile.py).
                         rb = pa.RecordBatch.from_arrays(
                             [rb.column(n) for n in file_order]
                             + [pa.array([bucket] * rb.num_rows, pa.int32())],
@@ -296,26 +241,10 @@ def profile_clips_direct(spark, files: list, clips: DataFrame) -> DataFrame:
                 finally:
                     pf.close()
 
-    # One task per ROW GROUP, not per file (a ~256 MB file holds 2
-    # default-sized row groups): twice the tasks halves the straggler
-    # tail when files outnumber cores only slightly. The driver-side
-    # footer read is one local stat per file; a real Iceberg manifest
-    # carries split offsets for exactly this purpose.
-    import pyarrow.parquet as _pq
-
-    rows = []
-    for p, b in files:
-        if _DIRECT_SPLIT_ROW_GROUPS:
-            try:
-                n_rg = _pq.ParquetFile(p).metadata.num_row_groups
-            except Exception:
-                n_rg = 1
-            rows.extend((p, int(b), rg) for rg in range(max(n_rg, 1)))
-        else:
-            rows.append((p, int(b), -1))  # -1 = whole file
+    rows = [(p, int(b)) for p, b in files]
     fdf = spark.createDataFrame(
         spark.sparkContext.parallelize(rows, max(len(rows), 1)),
-        "path string, bucket int, rg int",
+        "path string, bucket int",
     )
-    flat = fdf.mapInArrow(gen, f"{schema}, {_PROFILE_FIELDS}")
+    flat = fdf.mapInArrow(gen, _profile_ddl(clips))
     return _nest_profile(flat, keep)

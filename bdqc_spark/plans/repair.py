@@ -33,12 +33,15 @@ could move the goalposts.
 
 from __future__ import annotations
 
-from typing import Iterator
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from bdqc_spark.functions.audio import _rewritten, signal_pass
+from bdqc_spark.functions.normalize import normalize_gain, trim_silence
 
 # rule_id → repair pass
 REPAIRABLE = {
@@ -55,10 +58,13 @@ FATAL = ("audio.decode_failed", "audio.silent", "meta.sr_invalid")
 PASS_ORDER = ("dc", "declip", "trim", "normalize")
 
 REPAIR_FIELDS = (
-    "bytes binary, sr_hz int, dur_ms int, codec string, "
-    "repair_ok boolean, passes_applied string"
+    ("bytes", pa.binary(), None),
+    ("sr_hz", pa.int32(), 0),
+    ("dur_ms", pa.int32(), 0),
+    ("codec", pa.string(), None),
+    ("repair_ok", pa.bool_(), False),
+    ("passes_applied", pa.string(), None),
 )
-
 
 def repair_plan(decisions: DataFrame) -> DataFrame:
     """decisions(clip_id, keep, rule_hits, ...) → (clip_id, passes)
@@ -82,86 +88,37 @@ def repair_plan(decisions: DataFrame) -> DataFrame:
     )
 
 
-def _repair_arrow(target_lufs: float, pad_ms: int):
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from bdqc_spark.functions.audio import CODECS, decode_arrow_slice, encode
-        from bdqc_spark.functions.normalize import normalize_gain, trim_silence
-        from bdqc_spark.plans.profile import _binary_buffers
+def _repair_signal(
+    pcm: np.ndarray, sr: int, passes: list | None, target_lufs: float, pad_ms: int
+) -> dict:
+    want = set(passes or ())
+    done = []
+    if "dc" in want:
+        pcm = (pcm - np.float32(pcm.mean())) if pcm.size else pcm
+        done.append("dc")
+    if "declip" in want:
+        from bdqc_spark.functions.declip import declip as _declip
 
-        for batch in batches:
-            n = batch.num_rows
-            barr = batch.column(batch.schema.get_field_index("bytes"))
-            offsets, data = _binary_buffers(barr)
-            nulls = pa.compute.is_null(barr).to_numpy(zero_copy_only=False)
-            codec = batch.column(batch.schema.get_field_index("codec")).to_pylist()
-            sr_arr = batch.column(batch.schema.get_field_index("sr_hz"))
-            sr_null = pa.compute.is_null(sr_arr).to_numpy(zero_copy_only=False)
-            sr = sr_arr.to_numpy(zero_copy_only=False)
-            passes_col = batch.column(
-                batch.schema.get_field_index("passes")
-            ).to_pylist()
-
-            ok = np.zeros(n, dtype=bool)
-            dur_ms = np.zeros(n, dtype=np.int32)
-            payload: list = [None] * n
-            applied: list = [None] * n
-            for i in range(n):
-                if nulls[i] or codec[i] not in CODECS or sr_null[i] or not (sr[i] > 0):
-                    continue
-                want = set(passes_col[i] or ())
-                try:
-                    pcm = decode_arrow_slice(
-                        data, int(offsets[i]), int(offsets[i + 1]), codec[i]
-                    )
-                    done = []
-                    if "dc" in want:
-                        pcm = (pcm - np.float32(pcm.mean())) if pcm.size else pcm
-                        done.append("dc")
-                    if "declip" in want:
-                        from bdqc_spark.functions.declip import declip as _declip
-
-                        pcm, dst = _declip(pcm)
-                        # fail-open: a fully-railed clip has no anchor
-                        # samples — leave it for the drop path
-                        if dst["ok"] and dst["n_fixed"] > 0:
-                            done.append("declip")
-                    if "trim" in want:
-                        trimmed, _, _ = trim_silence(pcm, int(sr[i]), pad_ms)
-                        # fail-open: an all-silent clip has nothing to
-                        # keep — leave it for the drop path
-                        if trimmed.size:
-                            pcm = trimmed
-                            done.append("trim")
-                    if "normalize" in want:
-                        pcm, _, _, _ = normalize_gain(pcm, int(sr[i]), target_lufs)
-                        done.append("normalize")
-                except (ValueError, TypeError):
-                    continue
-                ok[i] = True
-                dur_ms[i] = int(round(pcm.shape[0] * 1000.0 / sr[i]))
-                payload[i] = encode(pcm, "pcm_s16le")
-                applied[i] = ",".join(done)
-
-            passthrough = {
-                name: batch.column(batch.schema.get_field_index(name))
-                for name in batch.schema.names
-                if name not in ("bytes", "sr_hz", "dur_ms", "codec", "passes")
-            }
-            yield pa.RecordBatch.from_pydict(
-                {
-                    **passthrough,
-                    "bytes": pa.array(payload, pa.binary()),
-                    "sr_hz": pa.array(np.where(ok, sr, 0).astype(np.int32), pa.int32()),
-                    "dur_ms": pa.array(dur_ms, pa.int32()),
-                    "codec": pa.array(
-                        ["pcm_s16le" if o else None for o in ok], pa.string()
-                    ),
-                    "repair_ok": pa.array(ok),
-                    "passes_applied": pa.array(applied, pa.string()),
-                }
-            )
-
-    return run
+        pcm, dst = _declip(pcm)
+        # fail-open: a fully-railed clip has no anchor
+        # samples — leave it for the drop path
+        if dst["ok"] and dst["n_fixed"] > 0:
+            done.append("declip")
+    if "trim" in want:
+        trimmed, _, _ = trim_silence(pcm, sr, pad_ms)
+        # fail-open: an all-silent clip has nothing to
+        # keep — leave it for the drop path
+        if trimmed.size:
+            pcm = trimmed
+            done.append("trim")
+    if "normalize" in want:
+        pcm, _, _, _ = normalize_gain(pcm, sr, target_lufs)
+        done.append("normalize")
+    return {
+        **_rewritten(pcm, sr),
+        "dur_ms": int(round(pcm.shape[0] * 1000.0 / sr)),
+        "passes_applied": ",".join(done),
+    }
 
 
 def repair_clips(
@@ -173,15 +130,10 @@ def repair_clips(
     """clips × decisions → repaired rows (eligible clips only), with
     rewritten pcm_s16le payloads, recomputed dur_ms, and the audit
     trail of passes actually applied."""
-    plan = repair_plan(decisions)
-    eligible = clips.join(plan, on="clip_id", how="inner")
-    passthrough = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in eligible.schema.fields
-        if f.name not in ("bytes", "sr_hz", "dur_ms", "codec", "passes")
-    )
-    return eligible.mapInArrow(
-        _repair_arrow(target_lufs, pad_ms), f"{passthrough}, {REPAIR_FIELDS}"
+    eligible = clips.join(repair_plan(decisions), on="clip_id", how="inner")
+    fn = partial(_repair_signal, target_lufs=target_lufs, pad_ms=pad_ms)
+    return signal_pass(
+        eligible, fn, REPAIR_FIELDS, "repair_ok", extra=("passes",), drop=("passes",)
     )
 
 

@@ -264,36 +264,155 @@ def test_g711_decode_encode_roundtrip_identity():
         assert np.array_equal(dec[re], lin)
 
 
-def test_null_sr_hz_in_raw_clips_degrades_not_crashes(spark):
+NAN = float("nan")
+_NO_AUDIO = {"bytes": None, "sr_hz": 0, "codec": None}
+
+
+def _profile_audio(c):
+    from bdqc_spark.plans.profile import profile_clips
+
+    return profile_clips(c).select(*[x for x in c.columns if x != "bytes"], "audio.*")
+
+
+def _op(module: str, name: str, **kw):
+    def run(clips):
+        import importlib
+
+        return getattr(importlib.import_module(module), name)(clips, **kw)
+
+    return run
+
+
+def _repair(clips):
+    from bdqc_spark.plans.repair import repair_clips
+
+    decisions = clips.sparkSession.createDataFrame(
+        [(r.clip_id, False, ["audio.dc_offset"]) for r in clips.select("clip_id").collect()],
+        "clip_id string, keep boolean, rule_hits array<string>",
+    )
+    return repair_clips(clips, decisions)
+
+
+_F = "bdqc_spark.functions."
+# id → (operator, ok flag, {output field: fill of a not-ok row},
+#       input columns the operator drops, needs a valid sr_hz)
+_DEGRADE_OPS = {
+    "profile_clips": (_profile_audio, "pcm_ok", {
+        "n_samples": 0, "dur_ms_decoded": 0, "rms": 0.0, "peak": 0.0, "clip_rate": 0.0,
+        "dc_off": 0.0, "hdr_sr": 0, "speech_ratio": 0.0, "bw_ratio": 1.0}, (), True),
+    "extract_audio_features": (_op(_F + "audio_features", "extract_audio_features"), "feat_ok", {
+        "n_frames": 0, "n_mels": 0, "mel_mean": None, "mel_std": None, "mfcc_mean": None,
+        "mfcc_std": None, "spectral_centroid": 0.0, "spectral_rolloff": 0.0,
+        "spectral_flatness": 0.0}, (), True),
+    "fingerprint_clips": (_op(_F + "audio_fingerprint", "fingerprint_clips"), "fp_ok", {
+        "audio_fp": 0, "fp_frames": 0, "fp_profile": None}, (), True),
+    "envelope_clips": (_op(_F + "align", "envelope_clips"), "env_ok", {
+        "audio_fp": 0, "env": None, "env_hop_ms": 0.0, "act_profile": None}, (), True),
+    "clip_snr": (_op(_F + "snr", "clip_snr"), "snr_ok", {
+        "snr_db": NAN, "noise_dbfs": NAN, "active_frac": NAN}, (), True),
+    "clip_pitch": (_op(_F + "pitch", "clip_pitch"), "pitch_ok", {
+        "voiced_frac": NAN, "f0_median_hz": NAN, "f0_iqr_hz": NAN, "n_frames": 0}, (), True),
+    "clip_music": (_op(_F + "music", "clip_music"), "music_ok", {
+        "mod_ratio_2_8hz": NAN, "low_energy_frac": NAN, "spectral_flux": NAN,
+        "music_like": False}, (), True),
+    "clip_loudness": (_op(_F + "loudness", "clip_loudness"), "loud_ok", {
+        "lufs": -np.inf, "peak_dbfs": -np.inf, "crest_db": NAN}, (), True),
+    "clip_loops": (_op(_F + "loops", "clip_loops"), "loop_ok", {
+        "loop_score": NAN, "loop_lag_ms": 0, "looped": False}, (), True),
+    "clip_room": (_op(_F + "room", "clip_room"), "room_ok", {
+        "hum_db_50": NAN, "hum_db_60": NAN, "decay_db_s": NAN, "rt60_est": NAN,
+        "n_decays": 0}, (), True),
+    "clip_clipping": (_op(_F + "clipping", "clip_clipping"), "clip_ok", {
+        "clipped_frac": NAN, "max_clip_run": 0, "crest_db": NAN, "dc_offset": NAN,
+        "n_dropouts": 0, "max_dropout_ms": NAN, "dropout_frac": NAN}, (), False),
+    "clip_bitdepth": (_op(_F + "bitdepth", "clip_bitdepth"), "bd_ok", {
+        "value_gcd": 0, "effective_bits": 0, "requantized": False}, (), False),
+    "clip_denoise": (_op(_F + "denoise", "clip_denoise"), "denoise_ok", {
+        "noise_dbfs_before": NAN, "noise_dbfs_after": NAN, "noise_reduction_db": NAN,
+        "snr_db_before": NAN, "snr_db_after": NAN}, (), True),
+    "clip_denoise_emit_bytes": (_op(_F + "denoise", "clip_denoise", emit_bytes=True),
+        "denoise_ok", {
+        "noise_dbfs_before": NAN, "noise_dbfs_after": NAN, "noise_reduction_db": NAN,
+        "snr_db_before": NAN, "snr_db_after": NAN, "denoised_bytes": None}, (), True),
+    "clip_normalize": (_op(_F + "normalize", "clip_normalize"), "norm_ok", {
+        **_NO_AUDIO, "lufs_before": NAN, "lufs_after": NAN, "gain_db": NAN,
+        "limited": False}, ("dur_ms",), True),
+    "clip_trim_silence": (_op(_F + "normalize", "clip_trim_silence"), "trim_ok", {
+        **_NO_AUDIO, "lead_trim_ms": 0, "trail_trim_ms": 0, "dur_ms_after": 0},
+        ("dur_ms",), True),
+    "resample_clips": (_op(_F + "resample", "resample_clips"), "resample_ok", {
+        **_NO_AUDIO, "n_samples": 0, "src_sr": 0}, (), True),
+    "augment_speed": (_op(_F + "augment", "augment_speed"), "augment_ok", {
+        **_NO_AUDIO, "n_samples": 0, "dur_ms": 0}, (), True),
+    "augment_tempo": (_op(_F + "augment", "augment_tempo"), "augment_ok", {
+        **_NO_AUDIO, "n_samples": 0, "dur_ms": 0}, (), True),
+    "augment_noise": (_op(_F + "augment", "augment_noise"), "augment_ok", {
+        **_NO_AUDIO, "n_samples": 0, "dur_ms": 0}, (), True),
+    "cue_alignment": (_op(_F + "cue_align", "cue_alignment"), "align_ok", {
+        "n_cues": 0, "speech_frac": NAN, "cue_frac": NAN, "cue_precision": NAN,
+        "cue_recall": NAN, "offset_ms": 0, "cue_precision_aligned": NAN,
+        "cue_recall_aligned": NAN}, ("subtitle",), True),
+    "repair_clips": (_repair, "repair_ok", {
+        **_NO_AUDIO, "dur_ms": 0, "passes_applied": None}, (), True),
+    "clips_channel_stats": (_op(_F + "channels", "clips_channel_stats"), "chan_ok", {
+        "channels": None, "rms_l": None, "rms_r": None, "balance_db": None, "lr_corr": None,
+        "phase_inverted": None, "downmix_loss_db": None},
+        ("sr_hz", "dur_ms", "codec", "transcript", "subtitle"), False),
+}
+
+
+def _same(got, want) -> bool:
+    if isinstance(want, float) and np.isnan(want):
+        return isinstance(got, float) and np.isnan(got)
+    return got is None if want is None else got == want
+
+
+@pytest.mark.parametrize("op", sorted(_DEGRADE_OPS))
+def test_null_sr_hz_in_raw_clips_degrades_not_crashes(spark, op):
     """ADVICE r3: null sr_hz ints arrive as NaN through Arrow to_numpy,
     so `is None` guards never fire — the validity bitmap must be used.
-    Null sr in the RAW clips input must degrade to pcm_ok/feat_ok=false,
-    never raise, in both the profile and the feature-extraction paths."""
-    from pyspark.sql import functions as F
-
-    from bdqc_spark.functions.audio_features import extract_audio_features
-    from bdqc_spark.plans.profile import profile_clips
-    from bdqc_spark.synth.clips import generate_clips_df
-
-    clips = generate_clips_df(spark, 60, seed=43).withColumn(
-        "sr_hz",
-        F.when(F.xxhash64("clip_id") % 3 == 0, F.lit(None).cast("int")).otherwise(
-            F.col("sr_hz")
-        ),
+    Every audio operator must take null sr_hz, null bytes, an unknown
+    codec and truncated payloads without raising: every input row comes
+    back with its ok flag false, the fill values in its output fields
+    and its pass-through columns intact. Operators that do not need
+    the sample rate (clipping, bit depth, channel stats) decode the
+    null-sr_hz row; clipping's rate-dependent dropout fields keep their
+    fills there."""
+    fn, ok, fills, dropped, need_sr = _DEGRADE_OPS[op]
+    s16 = audio.encode(_tone(), "pcm_s16le")
+    srt = "1\n00:00:00,000 --> 00:00:00,400\nhello\n"
+    rows = [
+        ("null_sr", s16, None, 500, "pcm_s16le"),
+        ("null_bytes", None, 16000, 500, "pcm_s16le"),
+        ("bad_codec", s16, 16000, 500, "mp3x"),
+        ("trunc_wav", audio.encode(_tone(), "wav")[:30], 16000, 500, "wav"),
+        ("trunc_s16", s16[:-1], 16000, 500, "pcm_s16le"),
+    ]
+    clips = spark.createDataFrame(
+        [(*r, f"clip {r[0]}", srt) for r in rows],
+        "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, "
+        "transcript string, subtitle string",
     )
-    nulled = {
-        r.clip_id
-        for r in clips.where(F.col("sr_hz").isNull()).select("clip_id").collect()
-    }
-    assert nulled  # the injection actually hit some rows
-
-    prof = profile_clips(clips).toPandas()
-    assert len(prof) == 60
-    assert not prof[prof.clip_id.isin(nulled)].audio.apply(lambda a: a["pcm_ok"]).any()
-
-    feats = extract_audio_features(clips).toPandas()
-    assert len(feats) == 60
-    assert not feats[feats.clip_id.isin(nulled)].feat_ok.any()
+    out = fn(clips)
+    passthrough = [
+        c for c in clips.columns if c != "bytes" and c not in dropped and c not in fills
+    ]
+    assert set(out.columns) == {*passthrough, ok, *fills}
+    assert [c for c in out.columns if c in passthrough] == passthrough
+    got = {r.clip_id: r.asDict() for r in out.collect()}
+    assert sorted(got) == sorted(r[0] for r in rows)
+    src = {r.clip_id: r.asDict() for r in clips.collect()}
+    for cid, row in got.items():
+        assert all(row[c] == src[cid][c] for c in passthrough), cid
+        if cid == "null_sr" and not need_sr:
+            assert row[ok] is True
+            if op == "clip_clipping":
+                for c in ("n_dropouts", "max_dropout_ms", "dropout_frac"):
+                    assert _same(row[c], fills[c]), (cid, c, row[c])
+            continue
+        assert row[ok] is False, cid
+        for c, want in fills.items():
+            assert _same(row[c], want), (cid, c, row[c])
 
 
 # --------------------------------------------------------------------------

@@ -78,3 +78,24 @@ def test_direct_gate_falls_back_on_evolved_schema(spark, tbl, tmp_path):
     assert "rating" in clips.columns
     # old files lack `rating` -> gate refuses, pipeline falls back
     assert direct_scan_files(clips, None) is None
+
+
+def test_read_puts_bucket_last_for_mid_schema_first_append(spark, tmp_path):
+    """profile_clips_direct appends `bucket` as the LAST column of every
+    file batch and declares the output from `clips.schema`. The two
+    agree because IcebergishTable.read is Spark's partitioned parquet
+    read, which puts the partition column last even when the table's
+    first append carried `bucket` mid-schema."""
+    t = IcebergishTable(str(tmp_path / "mid"), num_buckets=4)
+    raw = generate_clips_df(spark, 60, seed=33)
+    mid = t.with_bucket(raw).select(raw.columns[0], "bucket", *raw.columns[1:])
+    assert mid.columns[1] == "bucket"
+    t.append(mid)
+    clips = t.read(spark)
+    assert clips.columns == raw.columns + ["bucket"]
+    files = direct_scan_files(clips, None)
+    assert files
+    a = profile_clips_direct(spark, files, clips).orderBy("clip_id").collect()
+    b = profile_clips(clips).orderBy("clip_id").collect()
+    assert len(a) == len(b) == 60
+    assert a == b

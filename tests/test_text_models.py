@@ -330,3 +330,16 @@ def test_c4_rules_planted(spark):
     assert not out["brace"]["c4_keep"] and out["brace"]["text_c4"] == ""
     assert not out["lorem"]["c4_keep"]
     assert not out["two_sents"]["c4_keep"]  # < 3 surviving sentences
+
+
+def test_n_tokens_null_and_empty(spark):
+    """n_tokens(NULL) is NULL and n_tokens("") is 0: regexp_count
+    propagates NULL, so an aggregate over null text skips the row
+    instead of counting -1 (the old size(split(...)) value)."""
+    from pyspark.sql import functions as F
+
+    from bdqc_spark.functions.text import n_tokens
+
+    df = spark.createDataFrame([(None,), ("",), ("a  b\tc\n",)], "t string")
+    got = [r.n for r in df.select(n_tokens(F.col("t")).alias("n")).collect()]
+    assert got == [None, 0, 3]
